@@ -1,5 +1,6 @@
 """Iterative k-means over embedding columns — the trained coarse
-quantizer for IVF similarity search (functions.similarity.ivf_topk).
+quantizer for ANN search (functions.similarity.coarse_topk and the PQ
+index, as `[centroids]` or one codebook per IMI half).
 
 Lloyd's algorithm as pure DataFrame ops per iteration:
   assign: nearest centroid per vector (literal-folded centroid arrays —
@@ -51,7 +52,7 @@ def kmeans_fit(
     init: list[list[float]] | None = None,
 ) -> list[list[float]]:
     """Train k centroids; returns the centroid matrix (k × d) ready to
-    pass to similarity.ivf_topk. Deterministic: seeded init from
+    pass to similarity.coarse_topk as `[centroids]`. Deterministic: seeded init from
     normalized Gaussian vectors, fixed iteration order. Pass `init`
     to start from explicit centroids instead (e.g. the seeded IMI
     half-space books, so a trained coarse quantizer shares provenance

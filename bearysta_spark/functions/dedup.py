@@ -459,7 +459,7 @@ def load_lsh_index(
     probing a 12-hash/3-band increment against a 16-hash/4-band index
     joins disjoint bucket spaces and silently classifies every
     near-dup fresh, the same silent-wrong-neighbors failure the
-    IMI-PQ serving path guards against (_checked_live_index). An index
+    PQ serving path guards against (check_pq_layout). An index
     written before the layout file existed (pre-r11) has no
     _layout.json and is admitted with the caller's parameters (the
     ensure_layout upgrade note: the geometry cannot be inferred from
@@ -1213,7 +1213,7 @@ def lsh_banding_curve(
     threshold: float = 0.5,
 ) -> DataFrame:
     """The LSH BANDING tuning table — the dedup twin of
-    similarity.imi_pq_operating_curve: for each banding of the same
+    similarity.pq_operating_curve: for each banding of the same
     `num_hashes` MinHash signature, report candidate-pair volume,
     exact-verified pairs (char-k-shingle Jaccard >= threshold), and
     precision/recall vs the EXACT all-pairs truth, integer ppm. This

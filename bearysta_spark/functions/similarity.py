@@ -1,17 +1,33 @@
 """Embedding similarity search: brute-force cosine top-k (the exact
-baseline) and LSH / IVF-style bucketed ANN (the scale path).
+baseline), LSH buckets, and one coarse-quantized ANN index.
 
-Vectors are `array<float>` columns. All kernels are JVM higher-order
-functions (zip_with + aggregate fold) — no Python per row; a vectorized
-Pandas-UDF kernel is provided for wide batches where numpy's SIMD dot
-beats the fold (flip `use_arrow_kernel`).
+Vectors are `array<float>` columns. The exact kernels are JVM
+higher-order functions (zip_with + aggregate fold) — no Python per row;
+the ANN index kernels are Arrow-batched numpy (one dgemm per batch).
+
+The ANN index is one composition of three parts:
+
+- **coarse quantizer** — a LIST of subspace codebooks. `[centroids]`
+  is flat IVF; `[cb1, cb2]` is the inverted multi-index (IMI, Babenko
+  & Lempitsky 2012), whose cells are the product of per-half cells.
+  IVF is simply the 1-way case: cell scores are the outer sum of the
+  per-subspace dot products, flattened row-major (cell = i·K2 + j for
+  two ways), ranked by score desc, ties to the lower flat cell id
+  (assign_cells_arrow). The number of ways is read from the list.
+- **encoder** — `raw` (IP-argmax PQ codes of x), `residual` (L2 PQ
+  codes of x − centroid(cell), served with the <q, centroid> offset)
+  or `opq` (residual over `perm`-permuted dimensions).
+- **store** — the in-memory index frame (pq_index_frame), the
+  persisted batch index (write_pq_index / load_pq_index) or the
+  stream-grown live index (streaming/ann.py). All three hold the same
+  (id, codes, cell) rows, partitioned by `ivf_cell` for a 1-way
+  quantizer and `imi_cell` otherwise, guarded by one layout
+  (pq_layout), and served by one ranker (pq_topk_from_index).
 
 Scale design: brute-force top-k is a crossJoin — fine for |queries| ≪
 |corpus| with the query side broadcast, O(Q·N) but embarrassingly
-parallel. The LSH variant buckets by random-hyperplane signs so each
-query only joins its bucket: candidate set shrinks ~2^bits, the join
-becomes an equi-join on the signature, and recall is tunable with
-multi-probe (probe_hamming ≥ 1 flips signature bits).
+parallel. LSH and the coarse quantizer turn it into an equi-join on a
+bucket/cell id, so each query only scores its probed buckets.
 """
 
 from __future__ import annotations
@@ -72,13 +88,23 @@ def _cosine_arrow(a: pd.Series, b: pd.Series) -> pd.Series:
     return pd.Series(out)
 
 
+def _topk(scored: DataFrame, score: str, k: int) -> DataFrame:
+    """(qid, nid, <score>, rank) rows with rank <= k: 1-based, score
+    desc, ties broken by nid asc for determinism."""
+    w = Window.partitionBy("qid").orderBy(F.desc(score), F.asc("nid"))
+    return (
+        scored.withColumn("rank", F.row_number().over(w))
+        .filter(F.col("rank") <= k)
+        .select("qid", "nid", score, "rank")
+    )
+
+
 def brute_force_topk(
     corpus: DataFrame,
     queries: DataFrame,
     k: int = 5,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    use_arrow_kernel: bool = False,
 ) -> DataFrame:
     """Exact top-k cosine neighbors of each query vector.
 
@@ -91,23 +117,13 @@ def brute_force_topk(
         F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec")
     )
     c = corpus.select(F.col(id_col).alias("nid"), F.col(vec_col).alias("nvec"))
-    kernel = (
-        _cosine_arrow(F.col("qvec"), F.col("nvec"))
-        if use_arrow_kernel
-        else cosine(F.col("qvec"), F.col("nvec"))
-    )
     scored = (
         F.broadcast(q)
         .crossJoin(c)
         .filter(F.col("qid") != F.col("nid"))
-        .withColumn("sim", kernel)
+        .withColumn("sim", cosine(F.col("qvec"), F.col("nvec")))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
+    return _topk(scored, "sim", k)
 
 
 def hyperplane_signature(
@@ -157,12 +173,7 @@ def lsh_topk(
         .filter(F.col("qid") != F.col("nid"))
         .withColumn("sim", cosine(F.col("qvec"), F.col("nvec")))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
+    return _topk(scored, "sim", k)
 
 
 def _cell_scores(vec: Column, centroids: list[list[float]]) -> list[Column]:
@@ -186,83 +197,64 @@ def nearest_cells(vec: Column, centroids: list[list[float]], n: int = 1) -> Colu
     return F.transform(top, lambda p: p["cell"])
 
 
+def _coarse_books(quantizer: list[list[list[float]]]) -> list:
+    """The coarse quantizer as float64 arrays, one (K_b, d_b) codebook
+    per subspace — refusing a bare centroid table, which would
+    otherwise be read as d one-centroid subspaces."""
+    import numpy as np
+
+    books = [np.asarray(cb, dtype=np.float64) for cb in quantizer]
+    if not books or any(b.ndim != 2 for b in books):
+        raise ValueError(
+            "a coarse quantizer is a list of subspace codebooks: pass "
+            "[centroids] for flat IVF, [cb1, cb2] for an inverted "
+            "multi-index"
+        )
+    return books
+
+
+def _coarse_scores(M, books):
+    """Flat-cell scores of a vector batch M (n, d): one dgemm per
+    subspace slice, combined by outer sum and flattened row-major, so
+    cell (i, j) of a 2-way quantizer is column i·K2 + j and scores
+    s1_i + s2_j. A 1-way quantizer is the single `M @ C.T`. The last
+    slice takes every remaining dimension."""
+    import numpy as np
+
+    cuts = np.cumsum([b.shape[1] for b in books])[:-1]
+    flat = None
+    for sub, C in zip(np.split(M, cuts, axis=1), books):
+        s = sub @ C.T
+        flat = (
+            s if flat is None
+            else (flat[:, :, None] + s[:, None, :]).reshape(len(M), -1)
+        )
+    return flat
+
+
 def assign_cells_arrow(
-    centroids: list[list[float]], probes: int = 1
+    quantizer: list[list[list[float]]],
+    probes: int = 1,
+    with_qc: bool = False,
 ):
-    """Arrow-batched IVF cell assignment: one `batch @ centroids.T`
-    dgemm per Arrow batch, top-`probes` cells per vector.
+    """Arrow-batched coarse cell assignment: the top-`probes` flat cell
+    ids per vector under `quantizer` (see _coarse_scores), ties to the
+    lower flat cell id (stable argsort). One small dgemm per subspace
+    per Arrow batch; the top-1 cell is the storage cell, the top-P the
+    query's probe list — for an IMI that is the multi-sequence probe,
+    and K1·K2 cells cost only K1+K2 broadcast centroids.
 
     The literal-expression `nearest_cells` builds K×d literals into the
     plan — past a few centroids the expression tree exceeds the codegen
     method-size limit and falls back to interpreted evaluation (measured
     ~8 s for 500×8×64 at sf0.01 vs ~0.2 s here). Centroids ship in the
-    UDF closure (KB-scale). Deterministic: stable argsort, ties by
-    ascending cell id."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType, IntegerType
+    UDF closure (KB-scale).
 
-    C = np.asarray(centroids, dtype=np.float64)
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def cells(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype=object)
-        M = np.array(list(v), dtype=np.float64)
-        scores = M @ C.T
-        idx = np.argsort(-scores, axis=1, kind="stable")[:, :probes]
-        return pd.Series(list(idx.astype("int32")))
-
-    return cells
-
-
-def assign_imi_cells_arrow(
-    cb1: list[list[float]], cb2: list[list[float]], probes: int = 1
-):
-    """Arrow-batched INVERTED MULTI-INDEX cell assignment (Babenko &
-    Lempitsky 2012): the coarse quantizer is the PRODUCT of two small
-    half-space codebooks — cell (i, j) scores s1_i + s2_j, where s1/s2
-    are the dot products of the vector's two halves against their
-    codebooks. K1·K2 cells from only K1+K2 stored centroids: this is
-    what keeps the centroid state broadcastable at 1e9+ vectors, where
-    a flat IVF needing the same cell count would have to broadcast
-    K1·K2 full-width centroids (r07 VERDICT ask #8). Returns the
-    top-`probes` flat cell ids (i·K2 + j) per vector — two half
-    dgemms + an outer sum per Arrow batch; the top-1 cell equals
-    (argmax s1, argmax s2), so corpus assignment and the
-    multi-sequence query probe share one kernel. Deterministic: stable
-    argsort, ties by ascending flat cell id."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    C1 = np.asarray(cb1, dtype=np.float64)
-    C2 = np.asarray(cb2, dtype=np.float64)
-    d1 = C1.shape[1]
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def cells(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype=object)
-        M = np.array(list(v), dtype=np.float64)
-        s1 = M[:, :d1] @ C1.T
-        s2 = M[:, d1:] @ C2.T
-        flat = (s1[:, :, None] + s2[:, None, :]).reshape(len(M), -1)
-        idx = np.argsort(-flat, axis=1, kind="stable")[:, :probes]
-        return pd.Series(list(idx.astype("int32")))
-
-    return cells
-
-
-def assign_imi_cells_scored_arrow(
-    cb1: list[list[float]], cb2: list[list[float]], probes: int = 1
-):
-    """assign_imi_cells_arrow returning (cell, qc) STRUCTS, where
-    qc = <v, centroid(cell)> = s1_i + s2_j — the query-to-coarse-
-    centroid inner product the RESIDUAL-encoded ADC needs as its
-    per-cell offset: score(q, x) ≈ <q, cent(cell)> + <q, r̂>. The
-    probing pass computes these scores anyway; emitting them costs
-    nothing extra and keeps offset and probe order consistent by
-    construction (FAISS IndexIVFPQ's coarse_dis term). Same kernel
-    shape and tie rule as assign_imi_cells_arrow."""
+    with_qc=True returns (cell, qc) structs instead, qc = <v,
+    centroid(cell)>: the per-cell offset a residual-encoded ADC adds
+    back (FAISS IndexIVFPQ's coarse_dis term). The probing pass
+    computes it anyway, so offset and probe order agree by
+    construction."""
     import numpy as np
     from pyspark.sql.types import (
         ArrayType,
@@ -272,71 +264,30 @@ def assign_imi_cells_scored_arrow(
         StructType,
     )
 
-    C1 = np.asarray(cb1, dtype=np.float64)
-    C2 = np.asarray(cb2, dtype=np.float64)
-    d1 = C1.shape[1]
-    out_t = ArrayType(
+    books = _coarse_books(quantizer)
+    elem = (
         StructType(
             [
                 StructField("cell", IntegerType()),
                 StructField("qc", DoubleType()),
             ]
         )
+        if with_qc
+        else IntegerType()
     )
 
-    @pandas_udf(out_t)
+    @pandas_udf(ArrayType(elem))
     def cells(v: pd.Series) -> pd.Series:
         if not len(v):
             return pd.Series([], dtype=object)
-        M = np.array(list(v), dtype=np.float64)
-        s1 = M[:, :d1] @ C1.T
-        s2 = M[:, d1:] @ C2.T
-        flat = (s1[:, :, None] + s2[:, None, :]).reshape(len(M), -1)
+        flat = _coarse_scores(np.array(list(v), dtype=np.float64), books)
         idx = np.argsort(-flat, axis=1, kind="stable")[:, :probes]
+        if not with_qc:
+            return pd.Series(list(idx.astype("int32")))
         return pd.Series(
             [
                 [(int(c), float(row[c])) for c in cs]
                 for cs, row in zip(idx, flat)
-            ]
-        )
-
-    return cells
-
-
-def assign_cells_scored_arrow(centroids: list[list[float]], probes: int = 1):
-    """assign_cells_arrow returning (cell, qc) structs — the flat-IVF
-    twin of assign_imi_cells_scored_arrow (qc = <v, centroid(cell)>,
-    the residual ADC's per-cell offset)."""
-    import numpy as np
-    from pyspark.sql.types import (
-        ArrayType,
-        DoubleType,
-        IntegerType,
-        StructField,
-        StructType,
-    )
-
-    C = np.asarray(centroids, dtype=np.float64)
-    out_t = ArrayType(
-        StructType(
-            [
-                StructField("cell", IntegerType()),
-                StructField("qc", DoubleType()),
-            ]
-        )
-    )
-
-    @pandas_udf(out_t)
-    def cells(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype=object)
-        M = np.array(list(v), dtype=np.float64)
-        scores = M @ C.T
-        idx = np.argsort(-scores, axis=1, kind="stable")[:, :probes]
-        return pd.Series(
-            [
-                [(int(c), float(row[c])) for c in cs]
-                for cs, row in zip(idx, scores)
             ]
         )
 
@@ -363,20 +314,20 @@ def _residual_l2_codes(R, C):
     return out
 
 
-def imi_cell_residual_codes_arrow(
-    cb1: list[list[float]],
-    cb2: list[list[float]],
+def cell_residual_codes_arrow(
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
     perm: list[int] | None = None,
 ):
-    """ONE-pass residual IMI-PQ indexing kernel: vector → [imi_cell,
-    code_0..code_{m-1}] where the codes L2-quantize the RESIDUAL
-    x − centroid(cell) (FAISS IndexIVFPQ's encode_vectors with
-    by_residual=true, on the IMI coarse quantizer). Keeping cell
-    assignment and residual encoding in one kernel preserves
-    _pq_index_frame's contract — one raw-vector scan, zero shuffles —
-    and guarantees the residual is taken against the SAME cell the row
-    is stored under.
+    """ONE-pass residual indexing kernel: vector → [cell, code_0..
+    code_{m-1}] where the codes L2-quantize the RESIDUAL x −
+    centroid(cell) (FAISS IndexIVFPQ's encode_vectors with
+    by_residual=true). The centroid of a flat cell is the
+    concatenation of its per-subspace centroids (unravel_index over
+    the codebook sizes). Keeping cell assignment and residual encoding
+    in one kernel keeps the index build at one raw-vector scan and
+    guarantees the residual is taken against the SAME cell the row is
+    stored under.
 
     `perm` (the OPQ arm) permutes the residual's dimensions before
     encoding — the FAISS OPQMatrix pre-transform restricted to the
@@ -387,23 +338,22 @@ def imi_cell_residual_codes_arrow(
     import numpy as np
     from pyspark.sql.types import ArrayType, IntegerType
 
-    C1 = np.asarray(cb1, dtype=np.float64)
-    C2 = np.asarray(cb2, dtype=np.float64)
+    books = _coarse_books(quantizer)
+    shape = tuple(len(b) for b in books)
     C = np.asarray(codebooks, dtype=np.float64)
     P = np.asarray(perm, dtype=np.int64) if perm is not None else None
-    d1 = C1.shape[1]
-    k2 = C2.shape[0]
 
     @pandas_udf(ArrayType(IntegerType()))
     def cell_codes(v: pd.Series) -> pd.Series:
         if not len(v):
             return pd.Series([], dtype=object)
         M = np.array(list(v), dtype=np.float64)
-        s1 = M[:, :d1] @ C1.T
-        s2 = M[:, d1:] @ C2.T
-        flat = (s1[:, :, None] + s2[:, None, :]).reshape(len(M), -1)
+        flat = _coarse_scores(M, books)
         cells = np.argsort(-flat, axis=1, kind="stable")[:, 0]
-        cent = np.concatenate([C1[cells // k2], C2[cells % k2]], axis=1)
+        cent = np.concatenate(
+            [b[i] for b, i in zip(books, np.unravel_index(cells, shape))],
+            axis=1,
+        )
         R = M - cent
         if P is not None:
             R = R[:, P]
@@ -419,47 +369,16 @@ def imi_cell_residual_codes_arrow(
     return cell_codes
 
 
-def ivf_cell_residual_codes_arrow(
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-):
-    """Flat-IVF twin of imi_cell_residual_codes_arrow: vector →
-    [ivf_cell, residual codes...]."""
-    import numpy as np
-    from pyspark.sql.types import ArrayType, IntegerType
-
-    CC = np.asarray(centroids, dtype=np.float64)
-    C = np.asarray(codebooks, dtype=np.float64)
-
-    @pandas_udf(ArrayType(IntegerType()))
-    def cell_codes(v: pd.Series) -> pd.Series:
-        if not len(v):
-            return pd.Series([], dtype=object)
-        M = np.array(list(v), dtype=np.float64)
-        cells = np.argsort(-(M @ CC.T), axis=1, kind="stable")[:, 0]
-        codes = _residual_l2_codes(M - CC[cells], C)
-        return pd.Series(
-            list(
-                np.concatenate(
-                    [cells[:, None].astype(np.int32), codes], axis=1
-                )
-            )
-        )
-
-    return cell_codes
-
-
-def imi_residual_frame(
+def residual_frame(
     df: DataFrame,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
+    quantizer: list[list[list[float]]],
     vec_col: str = "embedding",
     out_col: str = "residual",
 ) -> DataFrame:
-    """Residual vectors against the IMI coarse quantizer, as PURE
-    Catalyst expressions: cell = (argmax<h1, cb1>, argmax<h2, cb2>)
-    via nearest_cells' literal fold, residual = v − concat(cb1_i,
-    cb2_j) via zip_with. This is the TRAINING-path residual builder
+    """Residual vectors against the coarse quantizer, as PURE Catalyst
+    expressions: per subspace, cell = argmax <slice, cb> via
+    nearest_cells' literal fold; residual = v − concat(centroids) via
+    zip_with. This is the TRAINING-path residual builder
     (pq_codebooks_fit input): expression dot products are sequential
     folds, IEEE-identical to DuckDB's list_dot_product, so the trained
     codebooks replay bit-for-bit in the oracle (the kmeans_fit
@@ -468,52 +387,47 @@ def imi_residual_frame(
     but would COMPOUND through training iterations. Ties take the
     higher cell (nearest_cells' reverse-sort; oracle mirrors with
     ORDER BY score DESC, cell DESC)."""
-    d1, d2 = len(cb1[0]), len(cb2[0])
-    h1 = F.slice(F.col(vec_col), 1, d1)
-    h2 = F.slice(F.col(vec_col), d1 + 1, d2)
-    i = nearest_cells(h1, cb1, 1)[0]
-    j = nearest_cells(h2, cb2, 1)[0]
-    lit1 = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cb1])
-    lit2 = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cb2])
-    cent = F.concat(
-        F.element_at(lit1, i + 1), F.element_at(lit2, j + 1)
-    )
+    parts, off = [], 1
+    for cb in quantizer:
+        d = len(cb[0])
+        i = nearest_cells(F.slice(F.col(vec_col), off, d), cb, 1)[0]
+        lit = F.array(*[F.array(*[F.lit(float(x)) for x in c]) for c in cb])
+        parts.append(F.element_at(lit, i + 1))
+        off += d
     return df.withColumn(
         out_col,
         F.zip_with(
-            F.col(vec_col), cent, lambda a, b: a.cast("double") - b
+            F.col(vec_col), F.concat(*parts), lambda a, b: a.cast("double") - b
         ),
     )
 
 
-def imi_topk(
+def coarse_topk(
     corpus: DataFrame,
     queries: DataFrame,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
+    quantizer: list[list[list[float]]],
     k: int = 5,
     probes: int = 1,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
 ) -> DataFrame:
-    """IMI approximate top-k: ivf_topk with the two-level product
-    quantizer of assign_imi_cells_arrow. Corpus vectors live in their
-    single best product cell; each query probes its `probes`
-    best-combined-score cells and ranks exact cosine within them.
-    Same join shape as ivf_topk (query side explodes to `probes` rows
-    and broadcasts; candidates come from the cell equi-join) — only
-    the quantizer differs, trading a second half-dgemm for a
-    square-root-sized centroid table."""
+    """Coarse-quantized approximate top-k (IVF for `[centroids]`, IMI
+    for `[cb1, cb2]`): corpus vectors live in their single best cell;
+    each query probes its `probes` best cells and ranks exact cosine
+    within them. Equi-join on cell id → candidate count shrinks
+    ~|cells|/probes vs the crossJoin; recall is tuned by `probes`
+    (FAISS nprobe). The query side explodes to `probes` rows and
+    broadcasts; assignment and re-rank are Arrow-batched numpy."""
     c = corpus.select(
         F.col(id_col).alias("nid"),
         F.col(vec_col).alias("nvec"),
-        assign_imi_cells_arrow(cb1, cb2, 1)(F.col(vec_col))[0].alias("cell"),
+        assign_cells_arrow(quantizer, 1)(F.col(vec_col))[0].alias("cell"),
     )
     q = queries.select(
         F.col(id_col).alias("qid"),
         F.col(vec_col).alias("qvec"),
         F.explode(
-            assign_imi_cells_arrow(cb1, cb2, probes)(F.col(vec_col))
+            assign_cells_arrow(quantizer, probes)(F.col(vec_col))
         ).alias("cell"),
     )
     scored = (
@@ -522,61 +436,7 @@ def imi_topk(
         .filter(F.col("qid") != F.col("nid"))
         .withColumn("sim", _cosine_arrow(F.col("qvec"), F.col("nvec")))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
-
-
-def ivf_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    k: int = 5,
-    probes: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    use_arrow_kernel: bool = True,
-) -> DataFrame:
-    """IVF (inverted-file) approximate top-k: corpus vectors live in
-    their single nearest cell; each query probes its `probes` nearest
-    cells and ranks exact cosine within them. Equi-join on cell id →
-    candidate count shrinks ~|cells|/probes vs the crossJoin; recall is
-    tuned by `probes` (FAISS nprobe). Assignment and re-rank run as
-    Arrow-batched numpy by default (see assign_cells_arrow); flip
-    use_arrow_kernel=False for the pure-expression plan."""
-    if use_arrow_kernel:
-        corpus_cells = assign_cells_arrow(centroids, 1)(F.col(vec_col))[0]
-        query_cells = assign_cells_arrow(centroids, probes)(F.col(vec_col))
-        kernel = _cosine_arrow(F.col("qvec"), F.col("nvec"))
-    else:
-        corpus_cells = nearest_cells(F.col(vec_col), centroids, 1)[0]
-        query_cells = nearest_cells(F.col(vec_col), centroids, probes)
-        kernel = cosine(F.col("qvec"), F.col("nvec"))
-    c = corpus.select(
-        F.col(id_col).alias("nid"),
-        F.col(vec_col).alias("nvec"),
-        corpus_cells.alias("cell"),
-    )
-    q = queries.select(
-        F.col(id_col).alias("qid"),
-        F.col(vec_col).alias("qvec"),
-        F.explode(query_cells).alias("cell"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, "cell")
-        .filter(F.col("qid") != F.col("nid"))
-        .withColumn("sim", kernel)
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
+    return _topk(scored, "sim", k)
 
 
 def cosine_near_dup_pairs(
@@ -611,7 +471,7 @@ def cosine_near_dup_pairs(
     measured for the block grid) is checked against row_budget:
 
     - ``on_exceed="raise"`` (default): fail loudly with a pointer to
-      the approximate operators (semantic_dedup / lsh_topk / ivf_topk)
+      the approximate operators (semantic_dedup / lsh_topk / coarse_topk)
       instead of silently burning an N² pass at 100×.
     - ``on_exceed="route"``: degrade to cell_cosine_pairs — the
       SemDeDup cell-bounded pair surface (ΣN_c² ≈ N²/k) — with a
@@ -646,7 +506,7 @@ def cosine_near_dup_pairs(
         raise ValueError(
             f"cosine_near_dup_pairs is exact all-pairs (O(N²)) and the "
             f"input has {n} rows > row_budget={row_budget}. Use "
-            f"semantic_dedup / lsh_topk / ivf_topk for approximate "
+            f"semantic_dedup / lsh_topk / coarse_topk for approximate "
             f"workloads, pass on_exceed='route' to degrade to the "
             f"cell-bounded SemDeDup pair surface, or raise row_budget "
             f"to pay the quadratic bill explicitly."
@@ -783,7 +643,7 @@ def cell_cosine_pairs(
             df, n_rows if n_rows is not None else df.count(), id_col, vec_col
         )
 
-    cell = assign_cells_arrow(centroids, 1)(F.col(vec_col))[0]
+    cell = assign_cells_arrow([centroids], 1)(F.col(vec_col))[0]
     e = df.select(F.col(id_col), F.col(vec_col), cell.cast("int").alias("cell"))
 
     def kernel(key, pdf: pd.DataFrame) -> pd.DataFrame:
@@ -844,7 +704,7 @@ def semantic_dedup(
     """
     import numpy as np
 
-    cell = assign_cells_arrow(centroids, 1)(F.col(vec_col))[0]
+    cell = assign_cells_arrow([centroids], 1)(F.col(vec_col))[0]
     e = corpus.select(
         F.col(id_col), F.col(vec_col), cell.cast("int").alias("cell")
     )
@@ -896,7 +756,7 @@ def semantic_decontam(
     report is stable under cell-population changes below the cut."""
     import numpy as np
 
-    cell = assign_cells_arrow(centroids, 1)(F.col(vec_col))[0]
+    cell = assign_cells_arrow([centroids], 1)(F.col(vec_col))[0]
     tagged = train.select(
         F.col(id_col),
         F.col(vec_col),
@@ -1064,7 +924,7 @@ def pq_codes_arrow(codebooks: list[list[list[float]]]):
     per Arrow batch, stable argmax (ties → lowest cell id). Both code
     layouts derive from this one kernel — the row form
     (pq_code_rows_arrow, for LUT-join scoring) and the array form
-    (_pq_index_frame, the persisted-index payload) — so they cannot
+    (pq_index_frame, the index payload) — so they cannot
     drift."""
     import numpy as np
     from pyspark.sql.types import ArrayType, IntegerType
@@ -1223,12 +1083,7 @@ def pq_adc_topk(
         .groupBy("qid", "nid")
         .agg(F.sum("s").alias("adc"))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("adc"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "adc", "rank")
-    )
+    return _topk(scored, "adc", k)
 
 
 # -- Random projection (Johnson-Lindenstrauss) ------------------------------
@@ -1259,102 +1114,138 @@ def rp_project(
     return df.select(F.col(id_col), proj.alias(out_col))
 
 
-def ivf_pq_topk(
-    corpus: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
+# -- The PQ index: (id, codes, cell) rows under a coarse quantizer ---------
+
+
+def _cell_col(quantizer: list) -> str:
+    """Cell column of an index under `quantizer` (its partition key on
+    disk): `ivf_cell` for a 1-way (flat IVF) quantizer, `imi_cell` for
+    a multi-index."""
+    return "ivf_cell" if len(quantizer) == 1 else "imi_cell"
+
+
+def _check_encoding(encoding: str, perm: list[int] | None) -> None:
+    """The one validator of the (encoding, perm) pair for every PQ
+    index entry point: opq needs the trained permutation, and a
+    permutation means nothing to the other encodings."""
+    if encoding not in ("raw", "residual", "opq"):
+        raise ValueError(
+            f"encoding must be 'raw', 'residual' or 'opq', got {encoding!r}"
+        )
+    if (encoding == "opq") != (perm is not None):
+        raise ValueError(
+            "encoding='opq' and perm go together "
+            f"(got encoding={encoding!r}, perm={'set' if perm else None})"
+        )
+
+
+def pq_layout(
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
-    k: int = 5,
-    probes: int = 1,
+    encoding: str = "raw",
+    perm: list[int] | None = None,
+) -> dict:
+    """Layout constants of a PQ index — persisted next to the rows and
+    checked on every write, ingest and serve: the cell counts (`cells`
+    for a 1-way quantizer, `k1`, `k2`, … per subspace otherwise), the
+    PQ width, the digest of every float that determines cells and
+    codes, and the code ENCODING. All are correctness-load-bearing — a
+    residual index scored without the <q, centroid> offset (or vice
+    versa) silently returns wrong neighbors, and ensure_layout /
+    check_pq_layout turn that into a loud config error. Indexes written
+    before `encoding` existed carry no such field and refuse BOTH
+    forms — a rebuild, not a guess. encoding="opq" additionally
+    carries the trained dimension permutation VERBATIM: opq codes live
+    in the permuted subspace layout, so a probe LUT built under a
+    different (or no) permutation silently scores garbage — the perm
+    is layout, not a serve-time knob."""
+    import hashlib
+    import json
+
+    _check_encoding(encoding, perm)
+    if len(quantizer) == 1:
+        layout = {"cells": len(quantizer[0])}
+    else:
+        layout = {f"k{b + 1}": len(cb) for b, cb in enumerate(quantizer)}
+    layout["m"] = len(codebooks)
+    layout["codebooks_md5"] = hashlib.md5(
+        json.dumps([*quantizer, codebooks]).encode()
+    ).hexdigest()
+    layout["encoding"] = encoding
+    if perm is not None:
+        layout["perm"] = [int(p) for p in perm]
+    return layout
+
+
+def pq_index_frame(
+    corpus: DataFrame,
+    quantizer: list[list[list[float]]],
+    codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
-    adc_agg=None,
+    encoding: str = "raw",
+    perm: list[int] | None = None,
 ) -> DataFrame:
-    """IVF-PQ approximate top-k — the composed billion-scale ANN layout
-    (FAISS IndexIVFPQ): the coarse quantizer (IVF cells) prunes WHICH
-    vectors are scored, product quantization compresses HOW they are
-    scored. Corpus vectors are stored as (ivf_cell, m subspace codes) —
-    the raw vectors never participate in search; queries probe their
-    `probes` nearest cells and rank candidates by the LUT-sum
-    asymmetric distance.
+    """The PQ index ROWS — (id, codes array<int>, cell) with cell in
+    `ivf_cell`/`imi_cell` (_cell_col) — without a store: what
+    write_pq_index persists and the streaming ingest commits (all
+    stores build through this, so the row layout cannot drift), and
+    the in-memory index audits score directly. ONE raw-vector pass and
+    ZERO shuffles: cell and codes kernels evaluate in a single
+    projection over the scan — also the streaming ingest's
+    per-micro-batch cost, where an explode→regroup shuffle would
+    dominate small batches.
 
-    100 TB shape: the scan reads cell id + m bytes per vector (32×
-    smaller than d=64 floats); the candidate join is an equi-join on
-    ivf_cell against a broadcast probe list; the LUT is broadcast; the
-    only wide op is the map-side-combined per-(qid, nid) sum over m
-    rows. Candidate volume ≈ corpus·probes/|cells| — tuned exactly like
-    FAISS nprobe — and nothing quadratic or vector-width-wide ever
-    shuffles. adc_agg overrides the score aggregate (the oracle-checked
-    query passes a DECIMAL-rounded sum; default raw double sum)."""
-    if adc_agg is None:
-        adc_agg = F.sum
-    cells = corpus.select(
-        F.col(id_col).alias("nid"),
-        assign_cells_arrow(centroids, 1)(F.col(vec_col))[0].alias("ivf_cell"),
-    )
-    probe = queries.select(
-        F.col(id_col).alias("qid"),
-        F.explode(assign_cells_arrow(centroids, probes)(F.col(vec_col))).alias(
-            "ivf_cell"
-        ),
-    )
-    codes = pq_code_rows_arrow(corpus, codebooks, id_col, vec_col).withColumnRenamed(
-        id_col, "nid"
-    )
-    lut = pq_lut_rows_arrow(queries, codebooks, id_col, vec_col)
-    # corpus-side pre-join (co-partitioned on nid), then both small
-    # frames broadcast: the corpus never shuffles
-    scored = (
-        codes.join(cells, "nid")
-        .join(F.broadcast(probe), "ivf_cell")
-        .filter(F.col("qid") != F.col("nid"))
-        .join(F.broadcast(lut), ["qid", "j", "cell"])
-        .groupBy("qid", "nid")
-        .agg(adc_agg(F.col("s")).alias("adc"))
-    )
-    w = Window.partitionBy("qid").orderBy(F.desc("adc"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "adc", "rank")
+    encoding="raw" stores the IP-argmax codes of x (pq_codes_arrow);
+    "residual" and "opq" take cell and codes from ONE kernel
+    (cell_residual_codes_arrow) so the residual is taken against the
+    exact cell the row is stored under. "opq" encodes `perm`-permuted
+    residuals (opq_roundrobin_perm); its codebooks must have been
+    trained on the permuted residual frame."""
+    _check_encoding(encoding, perm)
+    cell = _cell_col(quantizer)
+    vec = F.col(vec_col)
+    if encoding == "raw":
+        return corpus.select(
+            F.col(id_col),
+            pq_codes_arrow(codebooks)(vec).alias("codes"),
+            assign_cells_arrow(quantizer, 1)(vec)[0].alias(cell),
+        )
+    arr = cell_residual_codes_arrow(quantizer, codebooks, perm)(vec)
+    return corpus.select(
+        F.col(id_col),
+        F.slice(arr, 2, len(codebooks)).alias("codes"),
+        F.element_at(arr, 1).alias(cell),
     )
 
 
-def write_ivfpq_index(
+def write_pq_index(
     corpus: DataFrame,
-    centroids: list[list[float]],
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
     path: str,
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     encoding: str = "raw",
+    perm: list[int] | None = None,
 ) -> DataFrame:
-    """Persist the IVF-PQ index: one row per vector — (id, codes
-    array<int>, ivf_cell) — hive-partitioned by ivf_cell, exactly the
-    on-disk layout FAISS's IndexIVFPQ inverted lists map to. Indexing
-    reads the raw vectors ONCE; every later search reads cell id +
-    m code bytes per vector and, because the cell is the partition
-    key, a probe join prunes to ~probes/|cells| of the FILES before
-    any byte is read (dynamic partition pruning from the broadcast
-    probe list — plan-asserted in tests). Returns the write_corpus
-    manifest.
+    """Persist the PQ index — the FAISS IndexIVFPQ inverted-list layout
+    on parquet: one row per vector (id, codes array<int>, cell),
+    hive-partitioned by the cell column. Indexing reads the raw vectors
+    ONCE; every later search reads cell id + m code bytes per vector
+    and, because the cell is the partition key, a probe join prunes to
+    ~probes/|cells| of the FILES before any byte is read (dynamic
+    partition pruning from the broadcast probe list — plan-asserted in
+    tests). With an IMI quantizer this is the layout that survives
+    1e9+ vectors: K1·K2 cell-bounded partitions while the quantizer
+    state that broadcasts at build and search time stays K1+K2
+    half-width centroids. Returns the write_corpus manifest.
 
-    This mirrors write_lsh_index for the dedup stack: build once per
-    corpus snapshot, search any number of query batches from the files
-    with ivf_pq_topk_from_index. The quantizer geometry is persisted
-    after the rows (streaming/index.py:ensure_layout — the writer
-    wipes the directory) so load_ivfpq_index can refuse a probe under
-    different centroids/codebooks, which would silently return wrong
-    neighbors (the streaming arm's imipq_layout guard, applied to the
-    batch index).
-
-    encoding="residual" stores FAISS IndexIVFPQ's by_residual form:
-    codes L2-quantize x − centroid(cell) instead of x itself
-    (ivf_cell_residual_codes_arrow), and searches add the
-    <q, centroid(cell)> offset to the ADC sum. The layout carries the
-    encoding, so an index written one way REFUSES a probe planned the
-    other way — mixed encodings don't error anywhere downstream, they
-    just return wrong neighbors."""
+    The layout (pq_layout) is persisted after the rows
+    (streaming/index.py:ensure_layout — the writer wipes the
+    directory), behind a sibling pending-write marker, so
+    load_pq_index refuses a probe under a different geometry or
+    encoding and refuses a half-written rebuild."""
     from bearysta_spark.sinks import write_corpus
     from bearysta_spark.streaming.index import (
         clear_pending_write,
@@ -1362,257 +1253,203 @@ def write_ivfpq_index(
         mark_pending_write,
     )
 
-    layout = _ivfpq_layout(centroids, codebooks, encoding)
+    layout = pq_layout(quantizer, codebooks, encoding, perm)
     spark = corpus.sparkSession
     mark_pending_write(spark, path, layout)  # see write_lsh_index
-    idx = _pq_index_frame(
-        corpus,
-        assign_cells_arrow(centroids, 1)(F.col(vec_col))[0],
-        "ivf_cell",
-        codebooks,
-        id_col,
-        vec_col,
-        residual_kernel=(
-            ivf_cell_residual_codes_arrow(centroids, codebooks)
-            if encoding == "residual"
-            else None
-        ),
+    idx = pq_index_frame(
+        corpus, quantizer, codebooks, id_col, vec_col, encoding, perm
     )
-    manifest = write_corpus(idx, path, partition_by=["ivf_cell"])
+    manifest = write_corpus(idx, path, partition_by=[_cell_col(quantizer)])
     ensure_layout(spark, path, layout)
     clear_pending_write(spark, path)
     return manifest
 
 
-def _ivfpq_layout(
-    centroids: list[list[float]],
+def check_pq_layout(
+    spark,
+    path: str,
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
     encoding: str = "raw",
-) -> dict:
-    """Layout constants for a persisted IVF-PQ index: cell count, PQ
-    width, the digest of every float that determines cells/codes, and
-    the code ENCODING (raw IP-argmax vs residual L2) — all
-    correctness-load-bearing at search time: a residual index scored
-    without the <q, cent> offset (or vice versa) silently returns
-    wrong neighbors."""
-    import hashlib
-    import json
-
-    if encoding not in ("raw", "residual"):
-        raise ValueError(
-            f"encoding must be 'raw' or 'residual', got {encoding!r}"
-        )
-    return {
-        "cells": len(centroids),
-        "m": len(codebooks),
-        "codebooks_md5": hashlib.md5(
-            json.dumps([centroids, codebooks]).encode()
-        ).hexdigest(),
-        "encoding": encoding,
-    }
-
-
-def _load_guarded_index(
-    spark, path: str, want: dict, kind: str
-) -> DataFrame:
-    """Shared persisted-PQ index loader: admit a pre-layout index (the
-    geometry cannot be inferred from code rows) UNLESS a pending-write
-    marker shows the missing layout is an interrupted rebuild (r11
-    ADVICE), raise on a mismatch — an index grown under one quantizer
-    and probed under another silently returns wrong neighbors."""
+    perm: list[int] | None = None,
+) -> None:
+    """The read-side guard of every PQ store (batch and live): raise if
+    the layout persisted at `path` differs from the caller's — an index
+    built under one quantizer/encoding and probed under another
+    silently returns wrong neighbors. A layout-less index is admitted
+    as pre-layout legacy (its geometry cannot be inferred from code
+    rows) UNLESS a pending-write marker shows it is an interrupted
+    rebuild. Never creates layout state."""
     from bearysta_spark.streaming.index import (
         check_pending_write,
         read_layout,
     )
 
+    want = pq_layout(quantizer, codebooks, encoding, perm)
     cur = read_layout(path, spark)
     if cur is None:
         check_pending_write(spark, path)
-    if cur is not None and cur != want:
+    elif cur != want:
         raise ValueError(
-            f"{kind} index layout mismatch at {path}: persisted {cur}, "
+            f"PQ index layout mismatch at {path}: persisted {cur}, "
             f"caller expects {want} — searching an index built under a "
             "different quantizer geometry returns wrong neighbors"
         )
+
+
+def load_pq_index(
+    spark,
+    path: str,
+    quantizer: list[list[list[float]]],
+    codebooks: list[list[list[float]]],
+    encoding: str = "raw",
+    perm: list[int] | None = None,
+) -> DataFrame:
+    """Read a persisted PQ index (write_pq_index) through the
+    quantizer-geometry guard (check_pq_layout)."""
+    check_pq_layout(spark, path, quantizer, codebooks, encoding, perm)
     return spark.read.parquet(path)
 
 
-def load_ivfpq_index(
-    spark,
-    path: str,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    encoding: str = "raw",
-) -> DataFrame:
-    """Read a persisted IVF-PQ index (write_ivfpq_index) with the
-    quantizer-geometry guard (centroids, codebooks, AND encoding)."""
-    return _load_guarded_index(
-        spark, path, _ivfpq_layout(centroids, codebooks, encoding), "IVF-PQ"
-    )
-
-
-def load_imipq_index(
-    spark,
-    path: str,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
-    codebooks: list[list[list[float]]],
-    encoding: str = "raw",
-    perm: list[int] | None = None,
-) -> DataFrame:
-    """Read a persisted IMI-PQ index (write_imipq_index) with the
-    quantizer-geometry guard — the same imipq_layout digest the
-    streaming arm validates on every ingest and serve (centroids,
-    codebooks, encoding, AND the opq permutation when present)."""
-    from bearysta_spark.streaming.ann import imipq_layout
-
-    return _load_guarded_index(
-        spark, path,
-        imipq_layout(cb1, cb2, codebooks, encoding, perm=perm), "IMI-PQ",
-    )
-
-
-def _pq_index_frame(
-    corpus: DataFrame,
-    cell_assign,
-    cell_col: str,
-    codebooks: list[list[list[float]]],
-    id_col: str,
-    vec_col: str,
-    residual_kernel=None,
-) -> DataFrame:
-    """Shared PQ-index build: (id, codes array<int>, <cell_col>) rows —
-    the coarse quantizer is whatever single-cell Column `cell_assign`
-    computes (flat IVF or IMI product cells), the codes are the m-way
-    PQ assignment. ONE raw-vector pass and ZERO shuffles: both Arrow
-    kernels (cell + codes) evaluate in a single projection over the
-    scan — this is also the streaming ingest's per-micro-batch cost
-    (streaming/ann.py), where an explode→regroup shuffle per batch
-    would dominate small batches. All persisted-index writers call
-    this so the code layout cannot drift between quantizers.
-
-    `residual_kernel` (a *_cell_residual_codes_arrow kernel) switches
-    to residual encoding: cell and codes then come from ONE combined
-    kernel — the residual must be taken against the exact cell the row
-    is stored under, so splitting them across two kernels would invite
-    a cell/residual mismatch. `cell_assign` is ignored in that mode."""
-    if residual_kernel is not None:
-        arr = residual_kernel(F.col(vec_col))
-        m = len(codebooks)
-        return corpus.select(
-            F.col(id_col),
-            F.slice(arr, 2, m).alias("codes"),
-            F.element_at(arr, 1).alias(cell_col),
-        )
-    return corpus.select(
-        F.col(id_col),
-        pq_codes_arrow(codebooks)(F.col(vec_col)).alias("codes"),
-        cell_assign.alias(cell_col),
-    )
-
-
-def _pq_ranked_from_index(
+def _pq_candidates(
     index: DataFrame,
     queries: DataFrame,
-    probe_cells,
-    cell_col: str,
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
+    probes: int,
     id_col: str,
     vec_col: str,
     adc_agg,
-    scored_probes: bool = False,
+    encoding: str = "raw",
     perm: list[int] | None = None,
 ) -> DataFrame:
-    """Shared persisted-PQ scoring: broadcast the probe list (qid,
-    <cell_col> from the multi-cell Column `probe_cells`) so the cell
-    equi-join dynamically prunes the index partitions, then rank EVERY
-    probed candidate by the broadcast ADC LUT sum — (qid, nid, adc,
-    rank) with no top-k cut, so operating-curve audits can read both
-    the candidate volume and any shortlist depth from one frame. Both
-    from-index searchers (IVF-PQ, IMI-PQ) rank through this —
-    identical join/rank logic by construction.
+    """Every candidate a `probes`-probe search scores, with its ADC
+    score and the probe RANK (prn, 0-based) of the cell it was found
+    in: (qid, nid, prn, adc). The broadcast probe list lets the cell
+    equi-join dynamically prune the index partitions; the broadcast
+    ADC LUT scores the codes. A probes=p search sees exactly the
+    prn < p slice of a wider one and ADC does not depend on prn, so
+    sweeps score once at max(probes) and read every grid point off
+    this frame.
 
-    scored_probes=True is the RESIDUAL-encoding serve: `probe_cells`
-    is then an array<struct<cell,qc>> (a *_scored_arrow kernel) and
-    the final score is adc + qc, qc = <q, centroid(cell)> — the
-    coarse-centroid term the residual codes dropped at encode time.
-    The combine is exact-decimal (both addends cast to DECIMAL(25,10),
-    rounded at 4dp) so it is order-independent and engine-replayable;
-    qc is constant per (qid, nid) group because a vector is stored
-    under exactly one cell. Raw indexes must NOT pass this (and
-    residual indexes must) — the layout `encoding` guard enforces the
-    pairing at load time."""
+    Residual/opq indexes (the encoding must match how the index was
+    written — the layout guard enforces it at load) add qc = <q,
+    centroid(cell)>, the coarse-centroid term the residual codes
+    dropped at encode time. The combine is exact-decimal (both addends
+    cast to DECIMAL(25,10), rounded at 4dp) so it is order-independent
+    and engine-replayable; qc is constant per (qid, nid) group because
+    a vector is stored under exactly one cell. opq builds the LUT over
+    `perm`-permuted query dims; the offset is permutation-invariant
+    and stays in the original space."""
+    _check_encoding(encoding, perm)
     if adc_agg is None:
         adc_agg = F.sum
-    if scored_probes:
-        probe = queries.select(
-            F.col(id_col).alias("qid"),
-            F.explode(probe_cells).alias("__pc"),
-        ).select("qid", F.col("__pc.cell").alias(cell_col), "__pc.qc")
-    else:
-        probe = queries.select(
-            F.col(id_col).alias("qid"),
-            F.explode(probe_cells).alias(cell_col),
+    cell = _cell_col(quantizer)
+    residual = encoding != "raw"
+    probe = queries.select(
+        F.col(id_col).alias("qid"),
+        F.posexplode(
+            assign_cells_arrow(quantizer, probes, with_qc=residual)(
+                F.col(vec_col)
+            )
+        ).alias("prn", "__pc"),
+    )
+    if residual:
+        probe = probe.select(
+            "qid", "prn", F.col("__pc.cell").alias(cell), "__pc.qc"
         )
+    else:
+        probe = probe.withColumnRenamed("__pc", cell)
     lut = pq_lut_rows_arrow(queries, codebooks, id_col, vec_col, perm=perm)
-    cand = index.join(F.broadcast(probe), cell_col).filter(
-        F.col("qid") != F.col(id_col)
+    grouped = (
+        index.join(F.broadcast(probe), cell)
+        .filter(F.col("qid") != F.col(id_col))
+        .select(
+            "qid",
+            F.col(id_col).alias("nid"),
+            "prn",
+            *(["qc"] if residual else []),
+            F.posexplode("codes").alias("j", "cell"),
+        )
+        .join(F.broadcast(lut), ["qid", "j", "cell"])
+        .groupBy("qid", "nid", "prn")
     )
-    sel = ["qid", F.col(id_col).alias("nid"),
-           F.posexplode("codes").alias("j", "cell")]
-    if scored_probes:
-        sel.insert(2, F.col("qc"))
-        scored = (
-            cand.select(*sel)
-            .join(F.broadcast(lut), ["qid", "j", "cell"])
-            .groupBy("qid", "nid")
-            .agg(
-                adc_agg(F.col("s")).alias("__adc_r"),
-                F.max("qc").alias("__qc"),
-            )
-            .select(
-                "qid",
-                "nid",
-                F.round(
-                    F.col("__adc_r").cast("decimal(25,10)")
-                    + F.col("__qc").cast("decimal(25,10)"),
-                    4,
-                )
-                .cast("double")
-                .alias("adc"),
-            )
+    if not residual:
+        return grouped.agg(adc_agg(F.col("s")).alias("adc"))
+    return grouped.agg(
+        adc_agg(F.col("s")).alias("__adc_r"), F.max("qc").alias("__qc")
+    ).select(
+        "qid",
+        "nid",
+        "prn",
+        F.round(
+            F.col("__adc_r").cast("decimal(25,10)")
+            + F.col("__qc").cast("decimal(25,10)"),
+            4,
         )
-    else:
-        scored = (
-            cand.select(*sel)
-            .join(F.broadcast(lut), ["qid", "j", "cell"])
-            .groupBy("qid", "nid")
-            .agg(adc_agg(F.col("s")).alias("adc"))
-        )
-    w = Window.partitionBy("qid").orderBy(F.desc("adc"), F.asc("nid"))
-    return scored.withColumn("rank", F.row_number().over(w)).select(
-        "qid", "nid", "adc", "rank"
+        .cast("double")
+        .alias("adc"),
     )
 
 
-def _pq_topk_from_index(
+def pq_topk_from_index(
     index: DataFrame,
     queries: DataFrame,
-    probe_cells,
-    cell_col: str,
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
-    k: int,
-    id_col: str,
-    vec_col: str,
-    adc_agg,
-    scored_probes: bool = False,
+    k: int = 5,
+    probes: int = 1,
+    id_col: str = "vec_id",
+    vec_col: str = "embedding",
+    adc_agg=None,
+    encoding: str = "raw",
     perm: list[int] | None = None,
 ) -> DataFrame:
-    """Top-k cut of _pq_ranked_from_index (the serving shape)."""
-    return _pq_ranked_from_index(
-        index, queries, probe_cells, cell_col, codebooks, id_col, vec_col,
-        adc_agg, scored_probes, perm=perm,
-    ).filter(F.col("rank") <= k)
+    """PQ top-k from any store's rows — a loaded persisted index, a
+    live stream view, or an in-memory pq_index_frame: queries probe
+    their `probes` best cells, the broadcast probe list prunes the cell
+    partitions before any byte is read, and candidates rank by the PQ
+    ADC LUT sum — raw corpus vectors never touch the search path.
+    Output (qid, nid, adc, rank), ties by nid asc. 100 TB shape: the
+    scan reads cell id + m bytes per vector; the probe list and LUT
+    broadcast; the only wide op is the map-side-combined per-(qid,
+    nid) ADC sum. `adc_agg` overrides that aggregate (the
+    oracle-checked queries pass a DECIMAL-rounded sum; default raw
+    double sum). `encoding`/`perm` must match how the index was
+    written (see _pq_candidates)."""
+    return _topk(
+        _pq_candidates(
+            index, queries, quantizer, codebooks, probes, id_col, vec_col,
+            adc_agg, encoding, perm,
+        ),
+        "adc",
+        k,
+    )
+
+
+def _probe_ranks(scored: DataFrame, plist) -> DataFrame:
+    """(qid, nid, prn, __r<p> for p in plist) where __r<p> is the
+    candidate's ADC rank WITHIN the prn < p slice: one running
+    conditional count per probes value over the shared (adc DESC, nid
+    ASC) total order — a running count of slice members over the total
+    order IS the slice row_number — so a whole probes grid costs one
+    window pass instead of one window + union per grid point."""
+    w = (
+        Window.partitionBy("qid")
+        .orderBy(F.desc("adc"), F.asc("nid"))
+        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
+    )
+    return scored.select(
+        "qid",
+        "nid",
+        "prn",
+        *[
+            F.sum(F.when(F.col("prn") < p, 1).otherwise(0))
+            .over(w)
+            .alias(f"__r{p}")
+            for p in plist
+        ],
+    )
 
 
 def opq_roundrobin_perm(
@@ -1677,57 +1514,10 @@ def opq_roundrobin_perm(
     return [ranked[(p % dsub) * m + p // dsub] for p in range(d)]
 
 
-def imi_pq_index_frame(
-    corpus: DataFrame,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
-    codebooks: list[list[list[float]]],
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    encoding: str = "raw",
-    perm: list[int] | None = None,
-) -> DataFrame:
-    """The IMI-PQ index ROWS — (id, codes array<int>, imi_cell) under
-    the stated encoding — without the persistence step: what
-    write_imipq_index writes and ingest_imipq_batch commits (all three
-    build through this, so the row layout cannot drift), exposed for
-    audits that score an index without needing the on-disk artifact.
-    encoding="opq" is residual encoding over `perm`-permuted residuals
-    (opq_roundrobin_perm); the codebooks must then have been trained
-    on the permuted residual frame."""
-    if encoding == "opq" and perm is None:
-        raise ValueError(
-            "imi_pq_index_frame: encoding='opq' requires the trained "
-            "dimension permutation (opq_roundrobin_perm)"
-        )
-    if encoding != "opq" and perm is not None:
-        raise ValueError(
-            f"imi_pq_index_frame: perm given but encoding={encoding!r} "
-            "— a permutation only applies to the opq encoding"
-        )
-    return _pq_index_frame(
-        corpus,
-        assign_imi_cells_arrow(cb1, cb2, 1)(F.col(vec_col))[0],
-        "imi_cell",
-        codebooks,
-        id_col,
-        vec_col,
-        residual_kernel=(
-            imi_cell_residual_codes_arrow(
-                cb1, cb2, codebooks,
-                perm=perm if encoding == "opq" else None,
-            )
-            if encoding in ("residual", "opq")
-            else None
-        ),
-    )
-
-
-def imi_pq_probe_sweep(
+def pq_probe_sweep(
     index: DataFrame,
     queries: DataFrame,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
     probes_list: tuple[int, ...],
     k: int = 5,
@@ -1738,98 +1528,17 @@ def imi_pq_probe_sweep(
     perm: list[int] | None = None,
 ) -> DataFrame:
     """Top-k at EVERY probes value in one pass — the sweep form of
-    imi_pq_topk_from_index: candidates are scored ONCE at
-    max(probes_list) with each candidate carrying its cell's probe
-    RANK (prn), and every grid point is then read off ONE window pass
-    (r13 optimization — previously each grid point re-ranked the
-    cached scored frame with its own row_number window + union, i.e.
-    |probes_list| window shuffles; now a single running conditional
-    count per probes value over the shared (adc DESC, nid ASC) total
-    order yields each candidate's rank WITHIN the prn<p slice, so the
-    whole grid is one window + one explode, no cache needed). The
-    per-point result is identical to a standalone probes=p search
-    because a probes=p candidate set is exactly the prn < p slice,
-    ADC does not depend on prn, and a running count of slice members
-    over the total order IS the slice row_number. Returns (probes,
-    qid, nid) top-k rows. encoding="opq": residual mechanics with the
-    query LUT built over `perm`-permuted query dims (matching an
-    opq-encoded index); the <q,cent> offset is permutation-invariant
-    and stays in the original space."""
-    if adc_agg is None:
-        adc_agg = F.sum
-    if (encoding == "opq") != (perm is not None):
-        raise ValueError(
-            "imi_pq_probe_sweep: encoding='opq' and perm go together "
-            f"(got encoding={encoding!r}, perm={'set' if perm else None})"
-        )
-    P = max(probes_list)
-    residual = encoding in ("residual", "opq")
-    pc = (
-        assign_imi_cells_scored_arrow(cb1, cb2, P)
-        if residual
-        else assign_imi_cells_arrow(cb1, cb2, P)
-    )(F.col(vec_col))
-    if residual:
-        probe = queries.select(
-            F.col(id_col).alias("qid"),
-            F.posexplode(pc).alias("prn", "__pc"),
-        ).select(
-            "qid", "prn", F.col("__pc.cell").alias("imi_cell"), "__pc.qc"
-        )
-    else:
-        probe = queries.select(
-            F.col(id_col).alias("qid"),
-            F.posexplode(pc).alias("prn", "imi_cell"),
-        )
-    lut = pq_lut_rows_arrow(queries, codebooks, id_col, vec_col, perm=perm)
-    cand = index.join(F.broadcast(probe), "imi_cell").filter(
-        F.col("qid") != F.col(id_col)
-    )
-    sel = ["qid", F.col(id_col).alias("nid"), "prn"]
-    if residual:
-        sel.append(F.col("qc"))
-    base = cand.select(
-        *sel, F.posexplode("codes").alias("j", "cell")
-    ).join(F.broadcast(lut), ["qid", "j", "cell"])
-    if residual:
-        scored = (
-            base.groupBy("qid", "nid", "prn")
-            .agg(
-                adc_agg(F.col("s")).alias("__adc_r"),
-                F.max("qc").alias("__qc"),
-            )
-            .select(
-                "qid",
-                "nid",
-                "prn",
-                F.round(
-                    F.col("__adc_r").cast("decimal(25,10)")
-                    + F.col("__qc").cast("decimal(25,10)"),
-                    4,
-                )
-                .cast("double")
-                .alias("adc"),
-            )
-        )
-    else:
-        scored = base.groupBy("qid", "nid", "prn").agg(
-            adc_agg(F.col("s")).alias("adc")
-        )
-    w = (
-        Window.partitionBy("qid")
-        .orderBy(F.desc("adc"), F.asc("nid"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
-    ranked = scored.select(
-        "qid",
-        "nid",
-        "prn",
-        *[
-            F.sum(F.when(F.col("prn") < p, 1).otherwise(0))
-            .over(w)
-            .alias(f"__r{p}")
-            for p in sorted(set(probes_list))
-        ],
+    pq_topk_from_index: candidates are scored ONCE at max(probes_list)
+    carrying their probe rank (_pq_candidates) and every grid point is
+    read off ONE window pass (_probe_ranks) + one explode, no cache
+    needed. The per-point result is identical to a standalone
+    probes=p search. Returns (probes, qid, nid) top-k rows."""
+    ranked = _probe_ranks(
+        _pq_candidates(
+            index, queries, quantizer, codebooks, max(probes_list), id_col,
+            vec_col, adc_agg, encoding, perm,
+        ),
+        sorted(set(probes_list)),
     )
     return (
         ranked.select(
@@ -1852,108 +1561,11 @@ def imi_pq_probe_sweep(
     )
 
 
-def write_imipq_index(
-    corpus: DataFrame,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
-    codebooks: list[list[list[float]]],
-    path: str,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    encoding: str = "raw",
-    perm: list[int] | None = None,
-) -> DataFrame:
-    """Persist the IMI-PQ index — the FAISS IndexIVFPQ shape with the
-    INVERTED MULTI-INDEX as the coarse quantizer (write_ivfpq_index's
-    layout, keyed by the flat product cell i·K2+j): one row per vector
-    (id, codes array<int>, imi_cell), hive-partitioned by imi_cell.
-    This is the layout that survives 1e9+ vectors: K1·K2 partitions
-    for cell-bounded inverted lists while the quantizer state that has
-    to broadcast at build AND search time stays K1+K2 half-width
-    centroids (square root of the cell count — r08 VERDICT ask #6
-    composing the r08 IMI quantizer with the persisted-PQ serving
-    path). Raw vectors are read once, at index-build time. The
-    quantizer geometry is persisted after the rows (the streaming
-    ingest's imipq_layout, identical digest) so load_imipq_index
-    refuses a mismatched probe. encoding="residual" stores
-    x − centroid(cell) codes (see write_ivfpq_index)."""
-    from bearysta_spark.sinks import write_corpus
-    from bearysta_spark.streaming.ann import imipq_layout
-    from bearysta_spark.streaming.index import (
-        clear_pending_write,
-        ensure_layout,
-        mark_pending_write,
-    )
-
-    layout = imipq_layout(cb1, cb2, codebooks, encoding, perm=perm)
-    spark = corpus.sparkSession
-    mark_pending_write(spark, path, layout)  # see write_lsh_index
-    idx = imi_pq_index_frame(
-        corpus, cb1, cb2, codebooks, id_col, vec_col, encoding, perm=perm
-    )
-    manifest = write_corpus(idx, path, partition_by=["imi_cell"])
-    ensure_layout(spark, path, layout)
-    clear_pending_write(spark, path)
-    return manifest
-
-
-def imi_pq_topk_from_index(
-    index: DataFrame,
-    queries: DataFrame,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
-    codebooks: list[list[list[float]]],
-    k: int = 5,
-    probes: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    adc_agg=None,
-    encoding: str = "raw",
-    perm: list[int] | None = None,
-) -> DataFrame:
-    """IMI-PQ top-k against a PERSISTED index (write_imipq_index):
-    queries probe their `probes` best product cells (multi-sequence
-    probe, one outer sum over two half dgemms), the broadcast probe
-    list dynamically prunes the imi_cell partitions before any byte is
-    read, and candidates are ranked by the PQ ADC LUT sum — raw corpus
-    vectors never touch the search path. Identical join/rank logic to
-    ivf_pq_topk_from_index — shared via _pq_topk_from_index; only the
-    quantizer differs. `encoding` must match how the index was WRITTEN
-    (load_imipq_index's layout guard enforces it): residual serves add
-    the <q, centroid(cell)> offset the residual codes dropped;
-    encoding="opq" additionally builds the LUT over `perm`-permuted
-    query dims (must equal the perm the index was written under — the
-    layout guard carries it)."""
-    if (encoding == "opq") != (perm is not None):
-        raise ValueError(
-            "imi_pq_topk_from_index: encoding='opq' and perm go together"
-        )
-    residual = encoding in ("residual", "opq")
-    return _pq_topk_from_index(
-        index,
-        queries,
-        (
-            assign_imi_cells_scored_arrow(cb1, cb2, probes)
-            if residual
-            else assign_imi_cells_arrow(cb1, cb2, probes)
-        )(F.col(vec_col)),
-        "imi_cell",
-        codebooks,
-        k,
-        id_col,
-        vec_col,
-        adc_agg,
-        scored_probes=residual,
-        perm=perm,
-    )
-
-
-def imi_pq_topk_refined(
+def pq_topk_refined(
     index: DataFrame,
     vectors: DataFrame,
     queries: DataFrame,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
     k: int = 5,
     probes: int = 1,
@@ -1965,32 +1577,32 @@ def imi_pq_topk_refined(
     encoding: str = "raw",
     perm: list[int] | None = None,
 ) -> DataFrame:
-    """Two-stage IMI-PQ search with EXACT refinement — the FAISS
+    """Two-stage PQ search with EXACT refinement — the FAISS
     IndexRefineFlat shape production serving actually runs: stage 1
     shortlists `refine` candidates per query by the lossy PQ ADC score
-    from the codes-only persisted index (imi_pq_topk_from_index —
-    partition-pruned, never a raw corpus float), stage 2 fetches ONLY
-    the shortlist's raw vectors (a left-semi-pruned point read of
-    ~refine·|Q| rows from the vectors store) and re-ranks by exact
-    cosine. This buys back the quantization error at a cost that
-    scales with |Q|·refine, never the corpus: the 100 TB scan stays
-    m bytes/vector, and full-width floats are touched for a few dozen
-    rows per query. Output: (qid, nid, sim, rank), ties by nid asc.
-    The |Q|·refine-row shortlist is scope-cached — it feeds both the
-    vector-fetch semi-join and the rerank join, and recomputing the
-    whole ADC stage per consumer would double stage-1 cost (callers
-    registering this must use scoped_caches=True). Pass `shortlist`
-    ((qid, nid) rows, e.g. an already-cached k=refine search) to skip
-    stage 1 entirely — the recall audit reranks the same frame its
-    ceiling row reads, so the two cannot drift."""
+    from the codes-only index (pq_topk_from_index — partition-pruned,
+    never a raw corpus float), stage 2 fetches ONLY the shortlist's raw
+    vectors (a left-semi-pruned point read of ~refine·|Q| rows from the
+    vectors store) and re-ranks by exact cosine. This buys back the
+    quantization error at a cost that scales with |Q|·refine, never the
+    corpus: the 100 TB scan stays m bytes/vector, and full-width floats
+    are touched for a few dozen rows per query. Output: (qid, nid, sim,
+    rank), ties by nid asc. The |Q|·refine-row shortlist is
+    scope-cached — it feeds both the vector-fetch semi-join and the
+    rerank join, and recomputing the whole ADC stage per consumer would
+    double stage-1 cost (callers registering this must use
+    scoped_caches=True). Pass `shortlist` ((qid, nid) rows, e.g. an
+    already-cached k=refine search) to skip stage 1 entirely — the
+    recall audit reranks the same frame its ceiling row reads, so the
+    two cannot drift."""
     from bearysta_spark.cachescope import scoped_cache
 
     short = (
         shortlist.select("qid", "nid")
         if shortlist is not None
         else scoped_cache(
-            imi_pq_topk_from_index(
-                index, queries, cb1, cb2, codebooks,
+            pq_topk_from_index(
+                index, queries, quantizer, codebooks,
                 k=refine, probes=probes, id_col=id_col, vec_col=vec_col,
                 adc_agg=adc_agg, encoding=encoding, perm=perm,
             ).select("qid", "nid")
@@ -2007,20 +1619,14 @@ def imi_pq_topk_refined(
         .join(nv, "nid")
         .withColumn("sim", cosine(F.col("qvec"), F.col("nvec")))
     )
-    w = Window.partitionBy("qid").orderBy(F.desc("sim"), F.asc("nid"))
-    return (
-        scored.withColumn("rank", F.row_number().over(w))
-        .filter(F.col("rank") <= k)
-        .select("qid", "nid", "sim", "rank")
-    )
+    return _topk(scored, "sim", k)
 
 
-def imi_pq_operating_curve(
+def pq_operating_curve(
     index: DataFrame,
     vectors: DataFrame,
     queries: DataFrame,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
     probes_list: tuple[int, ...] = (1, 2, 4, 8),
     refine_list: tuple[int, ...] = (5, 15, 30),
@@ -2029,42 +1635,38 @@ def imi_pq_operating_curve(
     vec_col: str = "embedding",
     adc_agg=None,
 ) -> DataFrame:
-    """The FAISS-style TUNING TABLE for the two-stage IMI-PQ search:
-    sweep the (probes × refine) grid over a persisted index and report,
-    per cell, the candidate volume (and its fraction of the corpus —
-    what stage 1 actually scans), the exact-rerank row count (what
-    stage 2 pays), and refined top-k recall against brute-force cosine
-    truth. imi_pq_refine_recall measures ONE point of this surface;
-    the curve is what a serving owner reads to pick parameters — it
+    """The FAISS-style TUNING TABLE for the two-stage PQ search: sweep
+    the (probes × refine) grid over a raw-encoded index and report, per
+    cell, the candidate volume (and its fraction of the corpus — what
+    stage 1 actually scans), the exact-rerank row count (what stage 2
+    pays), and refined top-k recall against brute-force cosine truth.
+    The curve is what a serving owner reads to pick parameters — it
     shows where the shortlist ceiling stops binding (raising refine
     past the probe bound buys nothing) and what each extra probe costs
     in scanned fraction. Output: (probes, refine, n_candidates,
     scanned_ppm, rerank_rows, hits, recall_ppm), one row per grid
     cell, integer ppm (1e6·x // denom) throughout.
 
-    Cost shape (r13: ONE stage-1 search for the whole grid): candidates
-    are scored once at max(probes) with their probe rank (prn), one
-    window pass of running conditional counts gives every candidate's
-    ADC rank at every probes value, the grid's integer stats come from
-    one aggregate, and the exact rerank is one shortlist explode + one
-    raw-vector fetch + one rerank window + one truth join for ALL
-    (probes, refine) cells; truth is |Q|·N brute force (an audit, run
-    on samples at 100 TB); raw full-width rows are touched for
-    ~max(refine)·|Q| rows per probes value total. Callers registering
-    this must use scoped_caches=True.
+    Cost shape: ONE stage-1 search for the whole grid — candidates are
+    scored once at max(probes) with their probe rank (_pq_candidates),
+    one window pass of running conditional counts gives every
+    candidate's ADC rank at every probes value (_probe_ranks), the
+    grid's integer stats come from one aggregate, and the exact rerank
+    is one shortlist explode + one raw-vector fetch + one rerank window
+    + one truth join for ALL (probes, refine) cells; truth is |Q|·N
+    brute force (an audit, run on samples at 100 TB); raw full-width
+    rows are touched for ~max(refine)·|Q| rows per probes value total.
+    Callers registering this must use scoped_caches=True.
 
-    ASSUMPTION (r11 ADVICE): `queries` is a SUBSET of `vectors` — the
-    scanned_ppm denominator is |Q|·(N−1), matching the qid != nid
-    self-exclusion in _pq_ranked_from_index. For an external query set
-    nothing is self-excluded, candidates can reach |Q|·N, and
-    scanned_ppm could exceed 1_000_000; callers auditing a disjoint
-    query batch should read n_candidates (exact either way) rather
-    than the ppm column. The registered query satisfies the
-    assumption (queries = vec_id < 5 of the corpus)."""
+    ASSUMPTION: `queries` is a SUBSET of `vectors` — the scanned_ppm
+    denominator is |Q|·(N−1), matching the qid != nid self-exclusion in
+    _pq_candidates. For an external query set nothing is
+    self-excluded, candidates can reach |Q|·N, and scanned_ppm could
+    exceed 1_000_000; callers auditing a disjoint query batch should
+    read n_candidates (exact either way) rather than the ppm column.
+    The registered query satisfies the assumption (queries = vec_id < 5
+    of the corpus)."""
     from bearysta_spark.cachescope import scoped_cache
-
-    if adc_agg is None:  # documented default (r13 ADVICE: the inline
-        adc_agg = F.sum  # rewrite lost _pq_ranked_from_index's fallback)
 
     truth = scoped_cache(
         brute_force_topk(vectors, queries, k=k, id_col=id_col,
@@ -2077,9 +1679,9 @@ def imi_pq_operating_curve(
         # non-ANSI Spark `div 0` is NULL, so an empty query set or a
         # <2-vector corpus would emit a full grid of NULL-recall rows —
         # a silently meaningless audit. Raise like the other
-        # empty-input guards (_checked_live_index, write_codelen_model).
+        # empty-input guards (the live PQ view, write_codelen_model).
         raise ValueError(
-            "imi_pq_operating_curve: empty query set or <2 corpus "
+            "pq_operating_curve: empty query set or <2 corpus "
             f"vectors (n_expected={n_expected}, denom={denom}) — the "
             "recall/scanned ppm columns would be NULL"
         )
@@ -2087,56 +1689,13 @@ def imi_pq_operating_curve(
     plist = sorted(set(probes_list))
     rlist = sorted(set(refine_list))
     qv = queries.select(F.col(id_col).alias("qid"), F.col(vec_col).alias("qvec"))
-
-    # r13 optimization (guide §2.4, the imi_pq_probe_sweep discipline
-    # taken to its conclusion): stage 1 is scored ONCE at max(probes)
-    # with each candidate carrying its cell's probe rank (prn) — the
-    # probes=p candidate set is exactly the prn<p slice and ADC does
-    # not depend on prn, so ONE window pass of running conditional
-    # counts yields each candidate's ADC rank at EVERY probes value
-    # (previously one full index join + rank window + cache PER probes
-    # value). The grid's integer stats then fall out of one aggregate,
-    # the rerank shortlist out of one explode, and every (probes,
-    # refine) recall out of ONE exact-cosine pass + ONE rerank window
-    # + ONE truth join (previously one of each per grid cell).
-    P = max(plist)
-    probe = queries.select(
-        F.col(id_col).alias("qid"),
-        F.posexplode(
-            assign_imi_cells_arrow(cb1, cb2, P)(F.col(vec_col))
-        ).alias("prn", "imi_cell"),
-    )
-    lut = pq_lut_rows_arrow(queries, codebooks, id_col, vec_col)
-    cand = index.join(F.broadcast(probe), "imi_cell").filter(
-        F.col("qid") != F.col(id_col)
-    )
-    scored = (
-        cand.select(
-            "qid",
-            F.col(id_col).alias("nid"),
-            "prn",
-            F.posexplode("codes").alias("j", "cell"),
-        )
-        .join(F.broadcast(lut), ["qid", "j", "cell"])
-        .groupBy("qid", "nid", "prn")
-        .agg(adc_agg(F.col("s")).alias("adc"))
-    )
-    w = (
-        Window.partitionBy("qid")
-        .orderBy(F.desc("adc"), F.asc("nid"))
-        .rowsBetween(Window.unboundedPreceding, Window.currentRow)
-    )
     ranked = scoped_cache(
-        scored.select(
-            "qid",
-            "nid",
-            "prn",
-            *[
-                F.sum(F.when(F.col("prn") < p, 1).otherwise(0))
-                .over(w)
-                .alias(f"__r{p}")
-                for p in plist
-            ],
+        _probe_ranks(
+            _pq_candidates(
+                index, queries, quantizer, codebooks, max(plist), id_col,
+                vec_col, adc_agg,
+            ),
+            plist,
         )
     )
 
@@ -2272,43 +1831,4 @@ def imi_pq_operating_curve(
             ).alias("recall_ppm"),
         )
         .orderBy("probes", "refine")
-    )
-
-
-def ivf_pq_topk_from_index(
-    index: DataFrame,
-    queries: DataFrame,
-    centroids: list[list[float]],
-    codebooks: list[list[list[float]]],
-    k: int = 5,
-    probes: int = 1,
-    id_col: str = "vec_id",
-    vec_col: str = "embedding",
-    adc_agg=None,
-    encoding: str = "raw",
-) -> DataFrame:
-    """IVF-PQ top-k against a PERSISTED index (write_ivfpq_index):
-    identical math to ivf_pq_topk, but the corpus side is the index
-    files — raw vectors never read, and the probe join on the ivf_cell
-    partition column prunes whole partitions before scan. The probe
-    list and ADC LUT broadcast; the only wide op is the
-    map-side-combined per-(qid, nid) ADC sum (shared core:
-    _pq_topk_from_index). `encoding` must match how the index was
-    WRITTEN (load_ivfpq_index's layout guard enforces it)."""
-    residual = encoding == "residual"
-    return _pq_topk_from_index(
-        index,
-        queries,
-        (
-            assign_cells_scored_arrow(centroids, probes)
-            if residual
-            else assign_cells_arrow(centroids, probes)
-        )(F.col(vec_col)),
-        "ivf_cell",
-        codebooks,
-        k,
-        id_col,
-        vec_col,
-        adc_agg,
-        scored_probes=residual,
     )

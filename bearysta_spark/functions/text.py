@@ -695,7 +695,7 @@ def write_classifier_model(
     """Persist a trained quality-classifier model (classifier_train's
     final weights) — the train-once/serve-many artifact every other
     trained state in this repo already has (write_lsh_index,
-    write_imipq_index, write_codelen_model) and the classifier lacked:
+    write_pq_index, write_codelen_model) and the classifier lacked:
     every serve/calibrate query retrained in-query. One (dim, w) row
     per hashed dimension, published ATOMICALLY with the drift model's
     versioned-marker protocol: rows land in a fresh v<k> subdir and

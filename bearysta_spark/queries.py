@@ -2316,12 +2316,11 @@ def knn_ivf_trained(spark: SparkSession, sf_dir: str) -> DataFrame:
     (nearest_cells reverse-sort) — each oracle stage mirrors its
     engine stage."""
     from bearysta_spark.functions.clustering import kmeans_fit
-    from bearysta_spark.functions.similarity import ivf_topk
 
     e = _t(spark, sf_dir, "embeddings")
     cents = kmeans_fit(e, k=4, max_iters=2, tol=0.0, seed=42)
     q = e.filter(F.col("vec_id") < 5)
-    out = ivf_topk(e, q, cents, k=5, probes=2)
+    out = S.coarse_topk(e, q, [cents], k=5, probes=2)
     return out.select(
         "qid",
         "nid",
@@ -3148,11 +3147,9 @@ def knn_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     by cell asc), so the DuckDB oracle replays assignment (row_number
     by score DESC, cell ASC), probe-2 search, and re-rank from the same
     centroid literals (shared module constant _IVF_CENTROIDS)."""
-    from bearysta_spark.functions.similarity import ivf_topk
-
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    out = ivf_topk(e, q, _IVF_CENTROIDS, k=5, probes=2)
+    out = S.coarse_topk(e, q, [_IVF_CENTROIDS], k=5, probes=2)
     return out.select(
         "qid",
         "nid",
@@ -3191,7 +3188,7 @@ def _clustered_e_sql(spread: float = 0.15) -> str:
 def _imi_rank_ctes(e_sql: str | None = None) -> str:
     """cm1/cm2/e/s1/s2/comb/rk: per-vector flat-product-cell scores
     (cell = i·K2 + j, score = s1_i + s2_j) and the per-vector cell
-    rank — the SQL replay of assign_imi_cells_arrow (rn = 1 is the
+    rank — the SQL replay of assign_cells_arrow (rn = 1 is the
     storage cell; rn <= P are the P probe cells). `e_sql` swaps the
     corpus CTE (the clustered-fixture hook); default is the raw
     embeddings table."""
@@ -3269,13 +3266,9 @@ def knn_imi(spark: SparkSession, sf_dir: str) -> DataFrame:
     exact cosine within them. Deterministic like knn_ivf (stable
     argsort, flat-cell-asc ties), so the oracle replays assignment,
     probing, and re-rank from the same codebook literals."""
-    from bearysta_spark.functions.similarity import imi_topk
-
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    out = imi_topk(
-        e, q, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], k=5, probes=4
-    )
+    out = S.coarse_topk(e, q, _IMI_CODEBOOKS, k=5, probes=4)
     return out.select(
         "qid",
         "nid",
@@ -3388,24 +3381,13 @@ def imi_ivf_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast, never pairwise in the corpus); everything else is the
     production cell equi-join. The only driver state is the 4-row
     config table and the hit counts."""
-    from bearysta_spark.functions.similarity import (
-        brute_force_topk,
-        imi_topk,
-        ivf_topk,
-    )
-
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    truth = brute_force_topk(e, q, k=5).select("qid", "nid")
+    truth = S.brute_force_topk(e, q, k=5).select("qid", "nid")
+    quantizers = {"ivf": [_IVF_CENTROIDS], "imi": _IMI_CODEBOOKS}
     tagged = None
     for method, probes in _RECALL_CONFIGS:
-        if method == "ivf":
-            top = ivf_topk(e, q, _IVF_CENTROIDS, k=5, probes=probes)
-        else:
-            top = imi_topk(
-                e, q, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], k=5,
-                probes=probes,
-            )
+        top = S.coarse_topk(e, q, quantizers[method], k=5, probes=probes)
         t = top.select(
             F.lit(method).alias("method"),
             F.lit(probes).cast("int").alias("probes"),
@@ -3471,13 +3453,11 @@ def semantic_source_profile(spark: SparkSession, sf_dir: str) -> DataFrame:
     plain equi-join on the shared id, and the profile is one small
     aggregate; nothing quadratic anywhere. Assignment determinism is
     knn_ivf's (stable argsort, ties by ascending cell)."""
-    from bearysta_spark.functions.similarity import assign_cells_arrow
-
     e = _t(spark, sf_dir, "embeddings")
     d = _t(spark, sf_dir, "documents")
     assigned = e.select(
         "vec_id",
-        assign_cells_arrow(_IVF_CENTROIDS, 1)(F.col("embedding"))[0].alias(
+        S.assign_cells_arrow([_IVF_CENTROIDS])(F.col("embedding"))[0].alias(
             "cell"
         ),
     )
@@ -6632,27 +6612,38 @@ def knn_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     is the per-(qid, nid) map-side-combined ADC sum. Oracle replays
     both quantizers and the composed search from the shared centroid /
     codebook literals; DECIMAL-rounded ADC keeps the sum
-    order-independent. See functions/similarity.py:ivf_pq_topk."""
+    order-independent. The in-memory index is the same
+    functions/similarity.py:pq_index_frame every store writes, served
+    by the same pq_topk_from_index ranker."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    out = S.ivf_pq_topk(
-        e,
-        q,
-        _IVF_CENTROIDS,
-        _PQ_CODEBOOKS,
-        k=5,
-        probes=2,
-        adc_agg=lambda c: dsum(c, 4),
+    ivf = [_IVF_CENTROIDS]
+    out = S.pq_topk_from_index(
+        S.pq_index_frame(e, ivf, _PQ_CODEBOOKS), q, ivf, _PQ_CODEBOOKS,
+        k=5, probes=2, adc_agg=lambda c: dsum(c, 4),
     )
     return out.select(
         "qid", "nid", "adc", F.col("rank").cast("int").alias("rank")
     )
 
 
+def _persisted_pq_index(
+    spark: SparkSession, e: DataFrame, sf_dir: str, name: str, quantizer
+) -> DataFrame:
+    """Write `e`'s raw-encoded PQ index (shared _PQ_CODEBOOKS) under
+    _index_root/<name> and load it back through the layout guard — the
+    store every persisted-index query searches."""
+    import os
+
+    path = os.path.join(_index_root(sf_dir), name)
+    S.write_pq_index(e, quantizer, _PQ_CODEBOOKS, path)
+    return S.load_pq_index(spark, path, quantizer, _PQ_CODEBOOKS)
+
+
 @query("knn_ivf_pq_persisted")
 def knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     """knn_ivf_pq against a PERSISTED index — the production serving
-    shape: write_ivfpq_index materializes (id, codes, ivf_cell) once,
+    shape: write_pq_index materializes (id, codes, ivf_cell) once,
     hive-partitioned by cell (the FAISS inverted-list layout on
     parquet), and the search joins the FILES: raw vectors are read only
     at index-build time, and the broadcast probe list dynamically
@@ -6662,20 +6653,12 @@ def knn_ivf_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     location comes from _index_root — co-located with the corpus (or
     $BEARYSTA_INDEX_DIR) so the registered shape is the cluster-valid
     one."""
-    import os
-
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    path = os.path.join(_index_root(sf_dir), "ivfpq_index")
-    S.write_ivfpq_index(e, _IVF_CENTROIDS, _PQ_CODEBOOKS, path)
-    idx = S.load_ivfpq_index(spark, path, _IVF_CENTROIDS, _PQ_CODEBOOKS)
-    out = S.ivf_pq_topk_from_index(
-        idx,
-        q,
-        _IVF_CENTROIDS,
-        _PQ_CODEBOOKS,
-        k=5,
-        probes=2,
+    ivf = [_IVF_CENTROIDS]
+    idx = _persisted_pq_index(spark, e, sf_dir, "ivfpq_index", ivf)
+    out = S.pq_topk_from_index(
+        idx, q, ivf, _PQ_CODEBOOKS, k=5, probes=2,
         adc_agg=lambda c: dsum(c, 4),
     )
     return out.select(
@@ -6743,26 +6726,12 @@ def knn_imi_pq_persisted(spark: SparkSession, sf_dir: str) -> DataFrame:
     codebooks, the multi-sequence probe (4 cells per query), the m=8
     PQ code assignment, and the DECIMAL-rounded ADC re-rank from the
     shared literals. See functions/similarity.py:
-    write_imipq_index / imi_pq_topk_from_index."""
-    import os
-
+    write_pq_index / pq_topk_from_index."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    path = os.path.join(_index_root(sf_dir), "imipq_index")
-    S.write_imipq_index(
-        e, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS, path
-    )
-    idx = S.load_imipq_index(
-        spark, path, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS
-    )
-    out = S.imi_pq_topk_from_index(
-        idx,
-        q,
-        _IMI_CODEBOOKS[0],
-        _IMI_CODEBOOKS[1],
-        _PQ_CODEBOOKS,
-        k=5,
-        probes=4,
+    idx = _persisted_pq_index(spark, e, sf_dir, "imipq_index", _IMI_CODEBOOKS)
+    out = S.pq_topk_from_index(
+        idx, q, _IMI_CODEBOOKS, _PQ_CODEBOOKS, k=5, probes=4,
         adc_agg=lambda c: dsum(c, 4),
     )
     return out.select(
@@ -6891,17 +6860,9 @@ def imi_pq_refine_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     100 TB shape: truth is |Q|·N brute with the query side broadcast
     (an audit, run on samples); both approximate arms are the codes-only
     partition-pruned serving plans."""
-    import os
-
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    path = os.path.join(_index_root(sf_dir), "imipq_index")
-    S.write_imipq_index(
-        e, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS, path
-    )
-    idx = S.load_imipq_index(
-        spark, path, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS
-    )
+    idx = _persisted_pq_index(spark, e, sf_dir, "imipq_index", _IMI_CODEBOOKS)
     truth = scoped_cache(
         S.brute_force_topk(e, q, k=5).select("qid", "nid")
     )
@@ -6909,17 +6870,16 @@ def imi_pq_refine_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     # ranked by the identical (adc DESC, nid ASC) key, so its
     # rank <= 5 prefix IS the ADC top-5 (no second probe/LUT pass),
     # and the refined row reranks the SAME cached frame its ceiling
-    # row counts (imi_pq_topk_refined's shortlist parameter)
+    # row counts (pq_topk_refined's shortlist parameter)
     short = scoped_cache(
-        S.imi_pq_topk_from_index(
-            idx, q, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS,
+        S.pq_topk_from_index(
+            idx, q, _IMI_CODEBOOKS, _PQ_CODEBOOKS,
             k=15, probes=4, adc_agg=lambda c: dsum(c, 4),
         ).select("qid", "nid", "rank")
     )
     adc5 = short.filter(F.col("rank") <= 5).select("qid", "nid")
-    ref5 = S.imi_pq_topk_refined(
-        idx, e, q, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS,
-        k=5, shortlist=short,
+    ref5 = S.pq_topk_refined(
+        idx, e, q, _IMI_CODEBOOKS, _PQ_CODEBOOKS, k=5, shortlist=short,
     ).select("qid", "nid")
     # r13 note: the _residual_recall_df union-before-truth-join
     # discipline was TRIED here and measured 1.10x SLOWER in a 3-pass
@@ -6976,28 +6936,12 @@ def knn_imi_pq_refined(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_dedup_similarity.py pins that refinement actually
     REORDERS the shortlist here (the query is non-vacuous: ADC top-5
     != refined top-5) and that every refined neighbor came from the
-    shortlist. See functions/similarity.py:imi_pq_topk_refined."""
-    import os
-
+    shortlist. See functions/similarity.py:pq_topk_refined."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    path = os.path.join(_index_root(sf_dir), "imipq_index")
-    S.write_imipq_index(
-        e, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS, path
-    )
-    idx = S.load_imipq_index(
-        spark, path, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS
-    )
-    out = S.imi_pq_topk_refined(
-        idx,
-        e,
-        q,
-        _IMI_CODEBOOKS[0],
-        _IMI_CODEBOOKS[1],
-        _PQ_CODEBOOKS,
-        k=5,
-        probes=4,
-        refine=15,
+    idx = _persisted_pq_index(spark, e, sf_dir, "imipq_index", _IMI_CODEBOOKS)
+    out = S.pq_topk_refined(
+        idx, e, q, _IMI_CODEBOOKS, _PQ_CODEBOOKS, k=5, probes=4, refine=15,
         adc_agg=lambda c: dsum(c, 4),
     )
     return out.select(
@@ -7134,28 +7078,13 @@ def imi_pq_operating_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     paid once per PROBES value, not per cell (one cached
     ranked-candidate frame; every refine depth is a rank filter).
     Oracle replays the full grid from the shared codebook literals.
-    See functions/similarity.py:imi_pq_operating_curve."""
-    import os
-
+    See functions/similarity.py:pq_operating_curve."""
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5)
-    path = os.path.join(_index_root(sf_dir), "imipq_index")
-    S.write_imipq_index(
-        e, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS, path
-    )
-    idx = S.load_imipq_index(
-        spark, path, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS
-    )
-    return S.imi_pq_operating_curve(
-        idx,
-        e,
-        q,
-        _IMI_CODEBOOKS[0],
-        _IMI_CODEBOOKS[1],
-        _PQ_CODEBOOKS,
-        probes_list=_CURVE_PROBES,
-        refine_list=_CURVE_REFINE,
-        k=5,
+    idx = _persisted_pq_index(spark, e, sf_dir, "imipq_index", _IMI_CODEBOOKS)
+    return S.pq_operating_curve(
+        idx, e, q, _IMI_CODEBOOKS, _PQ_CODEBOOKS,
+        probes_list=_CURVE_PROBES, refine_list=_CURVE_REFINE, k=5,
         adc_agg=lambda c: dsum(c, 4),
     )
 
@@ -7572,14 +7501,14 @@ def imi_pq_residual_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     writers + encoding guard are exercised in
     tests/test_dedup_similarity.py), and each arm scores candidates
     ONCE at probes=16 with per-candidate probe rank, every grid point
-    a rank filter (imi_pq_probe_sweep — the operating-curve stage-1
+    a rank filter (pq_probe_sweep — the operating-curve stage-1
     discipline). One brute-force truth, cached, serves all 6 cells.
 
     100 TB shape: training touches the corpus twice per iteration (one
     scan + one bounded partial-sum shuffle, driver state KB); the
     index frames are the standard one-pass codes build; the sweep is
     the partition-prunable codes-only probe join. Production serves
-    from write_imipq_index(encoding="residual") artifacts."""
+    from write_pq_index(encoding="residual") artifacts."""
     return _residual_recall_df(spark, _t(spark, sf_dir, "embeddings"))
 
 
@@ -7593,7 +7522,7 @@ def _residual_recall_df(
     variant: `e` is the (vec_id, embedding) corpus frame; coarse_exact
     adds the seeded-vs-trained exact-cosine coarse arms at probes=4
     (candidates from the probed product cells, ranked by exact cosine
-    — S.imi_topk, the imi_ivf_recall candidate shape); opq adds the
+    — S.coarse_topk, the imi_ivf_recall candidate shape); opq adds the
     permutation-OPQ arm (opq_roundrobin_perm + a codebook chain
     trained on the permuted residuals + permuted encode/LUT) at the
     same code bytes."""
@@ -7602,7 +7531,6 @@ def _residual_recall_df(
         kmeans_fit_multi,
         pq_codebooks_fit_joint,
     )
-    from bearysta_spark.functions.similarity import imi_pq_index_frame
 
     # r13 optimization (guide §2.4/§5): the corpus frame feeds every
     # training iteration, the residual build, the truth, and all index
@@ -7622,7 +7550,7 @@ def _residual_recall_df(
         tol=0.0,
     )
     res = scoped_cache(
-        S.imi_residual_frame(e, c1, c2).select("vec_id", "residual")
+        S.residual_frame(e, [c1, c2]).select("vec_id", "residual")
     )
     if opq:
         # the permutation depends only on the residual frame, so it can
@@ -7674,21 +7602,21 @@ def _residual_recall_df(
     # still emit its row (the oracle always does).
     parts = []
     for arm, cb, enc, aperm in arms:
-        idx = imi_pq_index_frame(e, c1, c2, cb, encoding=enc, perm=aperm)
-        topk = S.imi_pq_probe_sweep(
-            idx, q, c1, c2, cb, probes_list=_RES_PROBES, k=5,
+        idx = S.pq_index_frame(e, [c1, c2], cb, encoding=enc, perm=aperm)
+        topk = S.pq_probe_sweep(
+            idx, q, [c1, c2], cb, probes_list=_RES_PROBES, k=5,
             adc_agg=lambda c: dsum(c, 4), encoding=enc, perm=aperm,
         )
         parts.append(
             topk.select(F.lit(arm).alias("arm"), "probes", "qid", "nid")
         )
     if coarse_exact:
-        for arm, b1, b2 in (
-            ("coarse_seeded_exact", _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1]),
-            ("coarse_trained_exact", c1, c2),
+        for arm, coarse in (
+            ("coarse_seeded_exact", _IMI_CODEBOOKS),
+            ("coarse_trained_exact", [c1, c2]),
         ):
             parts.append(
-                S.imi_topk(e, q, b1, b2, k=5, probes=4).select(
+                S.coarse_topk(e, q, coarse, k=5, probes=4).select(
                     F.lit(arm).alias("arm"),
                     F.lit(4).cast("int").alias("probes"),
                     "qid",
@@ -7821,7 +7749,7 @@ def imi_pq_opq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     both engines produce the identical ranking, no near-tie risk; the
     codebook chain / encode / ADC follow imi_pq_residual_recall's
     replay discipline verbatim. Persisted form:
-    write_imipq_index(encoding="opq", perm=...) carries the perm in
+    write_pq_index(encoding="opq", perm=...) carries the perm in
     the layout guard (a probe LUT under a different permutation
     silently scores garbage — tests/test_dedup_similarity.py).
 
@@ -7837,33 +7765,20 @@ def imi_pq_opq_recall(spark: SparkSession, sf_dir: str) -> DataFrame:
     return _residual_recall_df(spark, e, opq=True)
 
 
-@query("knn_imi_pq_streamed")
-def knn_imi_pq_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """IMI-PQ search against a STREAM-GROWN index (streaming/ann.py) —
-    the continuous-embedding-pipeline shape: the corpus arrives as
-    three micro-batches, each quantized and committed under its
-    batch_id partition by the SAME per-batch core the streaming loop
-    runs (ingest_imipq_batch — raw vectors touched exactly once, at
-    arrival), the first two batches are folded by a mid-stream
-    compaction, and serving reads the marker-aware view through the
-    identical partition-pruned plan as the batch persisted path. The
-    shared knn_imi_pq_persisted oracle verifies the invariant that
-    makes streaming ingest trustworthy: an index grown incrementally —
-    across batch boundaries and a compaction — serves bit-identical
-    top-k to one built in a single batch pass. Chaos variants
-    (truncated-checkpoint replay, auto-compaction, layout guards) are
-    pinned in tests/test_streaming_ann.py."""
+def _stream_grown_imipq(
+    spark: SparkSession, e: DataFrame, sf_dir: str, name: str
+) -> str:
+    """Grow a PQ index of `e` (IMI quantizer) under _index_root/<name>
+    as three micro-batches through the streaming loop's own per-batch
+    core (ingest_pq_batch — raw vectors touched exactly once, at
+    arrival), folding the first two with a mid-stream compaction.
+    Returns the index root."""
     import os
 
-    from bearysta_spark.streaming.ann import (
-        imipq_topk_live,
-        ingest_imipq_batch,
-    )
+    from bearysta_spark.streaming.ann import ingest_pq_batch
     from bearysta_spark.streaming.index import compact_index, delete_dir
 
-    e = _t(spark, sf_dir, "embeddings")
-    q = e.filter(F.col("vec_id") < 5).select("vec_id", "embedding")
-    path = os.path.join(_index_root(sf_dir), "imipq_stream_index")
+    path = os.path.join(_index_root(sf_dir), name)
     # fresh stream per run: an earlier run's tiers/marker must not
     # leak into this one (the media_ingest_dedup cleanup discipline)
     delete_dir(spark, path)
@@ -7873,16 +7788,36 @@ def knn_imi_pq_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
         batch = e.filter(
             (F.col("vec_id") >= cuts[b]) & (F.col("vec_id") < cuts[b + 1])
         ).select("vec_id", "embedding")
-        ingest_imipq_batch(
-            batch, b, path, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1],
-            _PQ_CODEBOOKS,
-        )
+        ingest_pq_batch(batch, b, path, _IMI_CODEBOOKS, _PQ_CODEBOOKS)
         if b == 1:
             compact_index(
                 spark, path, 2, partition_cols=("batch_id", "imi_cell")
             )
-    out = imipq_topk_live(
-        q, path, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS,
+    return path
+
+
+@query("knn_imi_pq_streamed")
+def knn_imi_pq_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """IMI-PQ search against a STREAM-GROWN index (streaming/ann.py) —
+    the continuous-embedding-pipeline shape: the corpus arrives as
+    three micro-batches, each quantized and committed under its
+    batch_id partition by the SAME per-batch core the streaming loop
+    runs, the first two batches are folded by a mid-stream compaction
+    (_stream_grown_imipq), and serving reads the marker-aware view
+    through the identical partition-pruned plan as the batch persisted
+    path. The shared knn_imi_pq_persisted oracle verifies the
+    invariant that makes streaming ingest trustworthy: an index grown
+    incrementally — across batch boundaries and a compaction — serves
+    bit-identical top-k to one built in a single batch pass. Chaos
+    variants (truncated-checkpoint replay, auto-compaction, layout
+    guards) are pinned in tests/test_streaming_ann.py."""
+    from bearysta_spark.streaming.ann import pq_topk_live
+
+    e = _t(spark, sf_dir, "embeddings")
+    q = e.filter(F.col("vec_id") < 5).select("vec_id", "embedding")
+    path = _stream_grown_imipq(spark, e, sf_dir, "imipq_stream_index")
+    out = pq_topk_live(
+        q, path, _IMI_CODEBOOKS, _PQ_CODEBOOKS,
         k=5, probes=4, adc_agg=lambda c: dsum(c, 4),
     )
     return out.select(
@@ -7897,45 +7832,26 @@ ORACLE["knn_imi_pq_streamed"] = ORACLE["knn_imi_pq_persisted"]
 def knn_imi_pq_refined_streamed(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Two-stage refined search against a STREAM-GROWN index (r10
     verdict ask #4): before this, live serving was ADC-only while the
-    batch path had exact refinement — here imi_pq_topk_refined is
-    composed over the same checked marker-aware view imipq_topk_live
-    reads (streaming/ann.py:imipq_topk_refined_live), so the streaming
-    arm serves the production two-stage search. Same three-batch
-    ingest + mid-stream compaction as knn_imi_pq_streamed (shared
-    ingest core, raw vectors quantized once at arrival); the rerank
-    fetches shortlist members' raw vectors from the embeddings store —
-    the one full-width read, ~refine·|Q| rows. The shared
-    knn_imi_pq_refined oracle verifies the composition: a stream-grown
-    index refines bit-identically to a batch-built one. Chaos variants
-    (replay, compaction, layout guard) in tests/test_streaming_ann.py."""
-    import os
-
-    from bearysta_spark.streaming.ann import (
-        imipq_topk_refined_live,
-        ingest_imipq_batch,
-    )
-    from bearysta_spark.streaming.index import compact_index, delete_dir
+    batch path had exact refinement — here pq_topk_refined is composed
+    over the same checked marker-aware view pq_topk_live reads
+    (streaming/ann.py:pq_topk_refined_live), so the streaming arm
+    serves the production two-stage search. Same three-batch ingest +
+    mid-stream compaction as knn_imi_pq_streamed (_stream_grown_imipq);
+    the rerank fetches shortlist members' raw vectors from the
+    embeddings store — the one full-width read, ~refine·|Q| rows. The
+    shared knn_imi_pq_refined oracle verifies the composition: a
+    stream-grown index refines bit-identically to a batch-built one.
+    Chaos variants (replay, compaction, layout guard) in
+    tests/test_streaming_ann.py."""
+    from bearysta_spark.streaming.ann import pq_topk_refined_live
 
     e = _t(spark, sf_dir, "embeddings")
     q = e.filter(F.col("vec_id") < 5).select("vec_id", "embedding")
-    path = os.path.join(_index_root(sf_dir), "imipq_stream_refined_index")
-    delete_dir(spark, path)
-    n = e.agg(F.max("vec_id")).collect()[0][0] + 1
-    cuts = (0, n // 3, (2 * n) // 3, n)
-    for b in range(3):
-        batch = e.filter(
-            (F.col("vec_id") >= cuts[b]) & (F.col("vec_id") < cuts[b + 1])
-        ).select("vec_id", "embedding")
-        ingest_imipq_batch(
-            batch, b, path, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1],
-            _PQ_CODEBOOKS,
-        )
-        if b == 1:
-            compact_index(
-                spark, path, 2, partition_cols=("batch_id", "imi_cell")
-            )
-    out = imipq_topk_refined_live(
-        q, path, e, _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS,
+    path = _stream_grown_imipq(
+        spark, e, sf_dir, "imipq_stream_refined_index"
+    )
+    out = pq_topk_refined_live(
+        q, path, e, _IMI_CODEBOOKS, _PQ_CODEBOOKS,
         k=5, probes=4, refine=15, adc_agg=lambda c: dsum(c, 4),
     )
     return out.select(
@@ -9446,7 +9362,7 @@ def quality_classifier_persisted_filter(
     """The PERSISTED-MODEL form of quality_classifier_trained_filter —
     the train-once/serve-many production shape every other trained
     artifact in this repo already has (write_lsh_index,
-    write_imipq_index, write_codelen_model) and the classifier lacked:
+    write_pq_index, write_codelen_model) and the classifier lacked:
     weights are published to parquet ONCE (write_classifier_model —
     atomic versioned-marker flip carrying the serving geometry) and the
     serve path loads them back through the geometry guard

@@ -1,30 +1,35 @@
-"""Streaming ANN ingest + live serving against a self-growing IMI-PQ
-index — the similarity-search counterpart of the dedup family's
-persisted/incremental/streaming triple.
+"""The stream-grown store of the PQ index: streaming ingest + live
+serving against a self-growing index — the similarity-search
+counterpart of the dedup family's persisted/incremental/streaming
+triple.
 
-Batch ANN already has the production serving shape
-(functions.similarity.write_imipq_index + imi_pq_topk_from_index); a
-100 TB training-data pipeline additionally embeds documents
-CONTINUOUSLY and needs the index to absorb each micro-batch without a
-full rebuild. This module streams (id, vector) rows into the SAME
-codes-only, cell-partitioned layout the batch writer produces —
-per-batch cost is one Arrow quantization pass over the batch plus a
-batch-sized shuffle, never a corpus re-read — and serves top-k from a
-marker-aware consistent view of the accumulated index.
+functions.similarity builds the ANN index as one composition — a
+coarse quantizer (a list of subspace codebooks: `[centroids]` for flat
+IVF, `[cb1, cb2]` for an inverted multi-index), an encoder (raw /
+residual / opq) and a store. This module is the third store. A 100 TB
+training-data pipeline embeds documents CONTINUOUSLY and needs the
+index to absorb each micro-batch without a full rebuild, so (id,
+vector) rows stream into the SAME codes-only, cell-partitioned rows the
+batch writer produces (similarity.pq_index_frame) — per-batch cost is
+one Arrow quantization pass over the batch plus a batch-sized shuffle,
+never a corpus re-read — and top-k is served from a marker-aware
+consistent view through the same ranker as the batch index
+(similarity.pq_topk_from_index).
 
 Exactly-once by the house construction: the index sink is a batch_id
 dynamic-partition overwrite (a replayed micro-batch overwrites its own
-partition, never duplicates codes), the layout file pins the quantizer
-geometry (a stream restarted with different codebooks fails loudly
-BEFORE writing a mis-quantized row), and compaction — manual or
-compact_every=N from inside the loop — folds old batch partitions so
-file-listing cost stays bounded over the stream's lifetime.
+partition, never duplicates codes), the layout file (similarity.
+pq_layout) pins the quantizer geometry and encoding (a stream
+restarted with different codebooks fails loudly BEFORE writing a
+mis-quantized row), and compaction — manual or compact_every=N from
+inside the loop — folds old batch partitions so file-listing cost
+stays bounded over the stream's lifetime.
 
-100 TB shape: index rows are (id, m codes, imi_cell) — ~m bytes of
-payload per vector, 32×+ smaller than raw floats — hive-partitioned by
-the K1·K2 product cell, so the serving probe's broadcast cell list
-prunes partitions before any byte is read, exactly like the batch
-path. Quantizer state that must broadcast stays K1+K2 half-width
+100 TB shape: index rows are (id, m codes, cell) — ~m bytes of payload
+per vector, 32×+ smaller than raw floats — hive-partitioned by
+(batch_id, cell), so the serving probe's broadcast cell list prunes
+partitions before any byte is read, exactly like the batch path. With
+an IMI quantizer the state that must broadcast stays K1+K2 half-width
 centroids plus the m·ksub PQ codebooks.
 
 Ingest contract: ids are unique across the stream's lifetime (the
@@ -34,16 +39,16 @@ exposes, so a re-sent id would be scored twice.
 
 from __future__ import annotations
 
-import hashlib
-import json
-
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 from bearysta_spark.functions.similarity import (
-    imi_pq_index_frame,
-    imi_pq_topk_from_index,
-    imi_pq_topk_refined,
+    _cell_col,
+    check_pq_layout,
+    pq_index_frame,
+    pq_layout,
+    pq_topk_from_index,
+    pq_topk_refined,
 )
 from bearysta_spark.streaming.index import (
     compact_index,
@@ -52,101 +57,47 @@ from bearysta_spark.streaming.index import (
 )
 
 
-def imipq_layout(
-    cb1: list[list[float]],
-    cb2: list[list[float]],
-    codebooks: list[list[list[float]]],
-    encoding: str = "raw",
-    perm: list[int] | None = None,
-) -> dict:
-    """Layout constants for a streaming IMI-PQ index: both half-space
-    codebook digests, the PQ codebook digest, and the code ENCODING
-    (raw IP-argmax vs residual L2, r11 VERDICT #2). All four are
-    correctness-load-bearing — cells are argmax against cb1/cb2, codes
-    are quantized against the PQ codebooks under the stated encoding,
-    and a residual index scored without the <q, centroid> offset (or
-    vice versa) silently returns wrong neighbors; ensure_layout turns
-    that into a loud config error (the centroid-digest guard of the
-    streaming semantic-dedup arm). Pre-`encoding` indexes carry no
-    field and refuse BOTH new forms — a rebuild, not a guess.
-    encoding="opq" (r12 VERDICT ask #3) additionally carries the
-    trained dimension permutation VERBATIM: opq codes live in the
-    permuted subspace layout, so a probe LUT built under a different
-    (or no) permutation silently scores garbage — the perm is layout,
-    not a serve-time knob."""
-    if encoding not in ("raw", "residual", "opq"):
-        raise ValueError(
-            f"encoding must be 'raw', 'residual' or 'opq', got {encoding!r}"
-        )
-    if (encoding == "opq") != (perm is not None):
-        raise ValueError(
-            "imipq_layout: encoding='opq' and perm go together "
-            f"(got encoding={encoding!r}, perm={'set' if perm else None})"
-        )
-    layout = {
-        "k1": len(cb1),
-        "k2": len(cb2),
-        "m": len(codebooks),
-        "codebooks_md5": hashlib.md5(
-            json.dumps([cb1, cb2, codebooks]).encode()
-        ).hexdigest(),
-        "encoding": encoding,
-    }
-    if perm is not None:
-        layout["perm"] = [int(p) for p in perm]
-    return layout
-
-
-def _index_schema(id_col: str):
-    return f"{id_col} long, codes array<int>, imi_cell int, batch_id int"
-
-
-def ingest_imipq_batch(
+def ingest_pq_batch(
     batch_df: DataFrame,
     batch_id: int,
     index_root: str,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     encoding: str = "raw",
     perm: list[int] | None = None,
 ) -> None:
-    """Quantize ONE micro-batch into the persisted IMI-PQ layout and
-    commit it under its batch_id partition. This is the whole per-batch
-    ingest — shared verbatim by the streaming loop and offline backfill
-    (the registered query), so the two paths cannot drift.
+    """Quantize ONE micro-batch into the PQ index rows and commit it
+    under its batch_id partition. This is the whole per-batch ingest —
+    shared verbatim by the streaming loop and offline backfill (the
+    registered query), so the two paths cannot drift.
 
-    The row layout comes from the SAME _pq_index_frame the batch
-    writer (write_imipq_index) uses, so a stream-grown index is
-    file-compatible with a batch-built one: identical (id, codes,
-    imi_cell) rows, identical hive partitioning on the product cell
-    (plus batch_id for exactly-once), searchable by the identical
-    imi_pq_topk_from_index plan. Raw vectors are touched exactly once,
-    at ingest."""
-    spark = batch_df.sparkSession
+    The rows come from the SAME pq_index_frame the batch writer
+    (write_pq_index) uses, so a stream-grown index is file-compatible
+    with a batch-built one: identical (id, codes, cell) rows, identical
+    hive partitioning on the cell (plus batch_id for exactly-once),
+    searchable by the identical pq_topk_from_index plan. Raw vectors
+    are touched exactly once, at ingest."""
     ensure_layout(
-        spark, index_root,
-        imipq_layout(cb1, cb2, codebooks, encoding, perm=perm),
+        batch_df.sparkSession, index_root,
+        pq_layout(quantizer, codebooks, encoding, perm),
     )
-    idx = imi_pq_index_frame(
-        batch_df, cb1, cb2, codebooks, id_col, vec_col, encoding,
-        perm=perm,
+    idx = pq_index_frame(
+        batch_df, quantizer, codebooks, id_col, vec_col, encoding, perm
     )
     (
         idx.withColumn("batch_id", F.lit(batch_id))
         .write.mode("overwrite")
         .option("partitionOverwriteMode", "dynamic")
-        .partitionBy("batch_id", "imi_cell")
+        .partitionBy("batch_id", _cell_col(quantizer))
         .parquet(index_root)
     )
 
 
-def start_streaming_imipq_ingest(
+def start_streaming_pq_ingest(
     stream_vecs: DataFrame,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
     index_root: str,
     checkpoint: str,
@@ -156,23 +107,23 @@ def start_streaming_imipq_ingest(
     encoding: str = "raw",
     perm: list[int] | None = None,
 ):
-    """Stream (id, vector) rows into a self-growing persisted IMI-PQ
-    index. Each micro-batch pays one Arrow quantization pass (two half
-    dgemms for the cell + m sub-dgemms for the codes) and one
+    """Stream (id, vector) rows into a self-growing persisted PQ index.
+    Each micro-batch pays one Arrow quantization pass (one dgemm per
+    coarse subspace for the cell + m sub-dgemms for the codes) and one
     batch-sized codes shuffle; the index on disk grows by ~m bytes per
     vector. compact_every=N folds batch partitions from inside the
     loop every N batches (replay-safe: folding at upto=current only
     touches partitions whose batches have committed)."""
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
-        ingest_imipq_batch(
-            batch_df, batch_id, index_root, cb1, cb2, codebooks,
-            id_col, vec_col, encoding, perm=perm,
+        ingest_pq_batch(
+            batch_df, batch_id, index_root, quantizer, codebooks,
+            id_col, vec_col, encoding, perm,
         )
         if compact_every and batch_id > 0 and batch_id % compact_every == 0:
             compact_index(
                 batch_df.sparkSession, index_root, batch_id,
-                partition_cols=("batch_id", "imi_cell"),
+                partition_cols=("batch_id", _cell_col(quantizer)),
             )
 
     return (
@@ -182,62 +133,55 @@ def start_streaming_imipq_ingest(
     )
 
 
-def imipq_index_view(
+def pq_index_view(
     spark: SparkSession,
     index_root: str,
+    quantizer: list[list[list[float]]],
     id_col: str = "vec_id",
     before_batch: int | None = None,
 ) -> DataFrame | None:
-    """The marker-aware consistent view of a stream-grown IMI-PQ index
+    """The marker-aware consistent view of a stream-grown PQ index
     (streaming/index.py:read_index_view semantics: committed compaction
     tiers honored, half-written tiers hidden, optional batch_id upper
     bound so a probe never sees its own in-flight write). None while
     the index holds no data."""
     return read_index_view(
         spark, index_root, before_batch=before_batch,
-        schema=_index_schema(id_col),
+        schema=(
+            f"{id_col} long, codes array<int>, "
+            f"{_cell_col(quantizer)} int, batch_id int"
+        ),
     )
 
 
-def _checked_live_index(
+def _live_index(
     spark: SparkSession,
     index_root: str,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
     id_col: str,
     encoding: str = "raw",
     perm: list[int] | None = None,
 ) -> DataFrame:
     """The serving-side view both live searchers read: the marker-aware
-    consistent view, gated by the quantizer-geometry layout guard.
+    consistent view behind the shared layout guard (check_pq_layout).
     Raises if the index is empty or was grown under a different
     geometry (a read-side check only — serving never creates layout
     state)."""
-    from bearysta_spark.streaming.index import read_layout
-
-    cur = read_layout(index_root, spark)
-    want = imipq_layout(cb1, cb2, codebooks, encoding, perm=perm)
-    if cur is not None and cur != want:
-        raise ValueError(
-            f"index layout mismatch at {index_root}: persisted {cur}, "
-            f"caller expects {want} — searching an index grown under a "
-            "different quantizer geometry returns wrong neighbors"
-        )
-    idx = imipq_index_view(spark, index_root, id_col=id_col)
+    check_pq_layout(spark, index_root, quantizer, codebooks, encoding, perm)
+    idx = pq_index_view(spark, index_root, quantizer, id_col=id_col)
     if idx is None:
         raise ValueError(
-            f"streaming IMI-PQ index at {index_root} holds no committed "
+            f"streaming PQ index at {index_root} holds no committed "
             "rows yet — nothing to search"
         )
     return idx.drop("batch_id")
 
 
-def imipq_topk_live(
+def pq_topk_live(
     queries: DataFrame,
     index_root: str,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
     k: int = 5,
     probes: int = 1,
@@ -249,35 +193,25 @@ def imipq_topk_live(
 ) -> DataFrame:
     """Top-k against everything the stream has committed so far: the
     identical search plan as the batch persisted path
-    (imi_pq_topk_from_index — broadcast probe list dynamically prunes
-    the imi_cell partitions, broadcast ADC LUT ranks codes-only rows)
-    over the checked marker-aware view (_checked_live_index)."""
-    idx = _checked_live_index(
-        queries.sparkSession, index_root, cb1, cb2, codebooks, id_col,
-        encoding, perm=perm,
+    (pq_topk_from_index — broadcast probe list dynamically prunes the
+    cell partitions, broadcast ADC LUT ranks codes-only rows) over the
+    checked marker-aware view (_live_index)."""
+    idx = _live_index(
+        queries.sparkSession, index_root, quantizer, codebooks, id_col,
+        encoding, perm,
     )
-    return imi_pq_topk_from_index(
-        idx,
-        queries,
-        cb1,
-        cb2,
-        codebooks,
-        k=k,
-        probes=probes,
-        id_col=id_col,
-        vec_col=vec_col,
-        adc_agg=adc_agg,
-        encoding=encoding,
-        perm=perm,
+    return pq_topk_from_index(
+        idx, queries, quantizer, codebooks, k=k, probes=probes,
+        id_col=id_col, vec_col=vec_col, adc_agg=adc_agg,
+        encoding=encoding, perm=perm,
     )
 
 
-def imipq_topk_refined_live(
+def pq_topk_refined_live(
     queries: DataFrame,
     index_root: str,
     vectors: DataFrame,
-    cb1: list[list[float]],
-    cb2: list[list[float]],
+    quantizer: list[list[list[float]]],
     codebooks: list[list[list[float]]],
     k: int = 5,
     probes: int = 1,
@@ -289,34 +223,22 @@ def imipq_topk_refined_live(
     perm: list[int] | None = None,
 ) -> DataFrame:
     """Two-stage LIVE serving: the exact-refinement search
-    (functions.similarity.imi_pq_topk_refined — lossy ADC shortlist
-    from codes-only rows, exact-cosine rerank over a semi-join-pruned
-    point read of ~refine·|Q| raw vectors) composed over the SAME
-    checked marker-aware view imipq_topk_live serves from, so the
-    streaming arm runs the production two-stage search, not just
-    ADC-only top-k. `vectors` is the raw-vector store the pipeline
-    persisted at ingest time (the index holds m-byte codes only —
-    refinement is the one read that touches full-width floats, and
-    only for shortlist members). Batch-equality across replay and
-    compaction is chaos-tested in tests/test_streaming_ann.py; callers
-    must hold a cache scope (the shortlist is scope-cached)."""
-    idx = _checked_live_index(
-        queries.sparkSession, index_root, cb1, cb2, codebooks, id_col,
-        encoding, perm=perm,
+    (functions.similarity.pq_topk_refined — lossy ADC shortlist from
+    codes-only rows, exact-cosine rerank over a semi-join-pruned point
+    read of ~refine·|Q| raw vectors) composed over the SAME checked
+    marker-aware view pq_topk_live serves from. `vectors` is the
+    raw-vector store the pipeline persisted at ingest time (the index
+    holds m-byte codes only — refinement is the one read that touches
+    full-width floats, and only for shortlist members). Batch-equality
+    across replay and compaction is chaos-tested in
+    tests/test_streaming_ann.py; callers must hold a cache scope (the
+    shortlist is scope-cached)."""
+    idx = _live_index(
+        queries.sparkSession, index_root, quantizer, codebooks, id_col,
+        encoding, perm,
     )
-    return imi_pq_topk_refined(
-        idx,
-        vectors,
-        queries,
-        cb1,
-        cb2,
-        codebooks,
-        k=k,
-        probes=probes,
-        refine=refine,
-        id_col=id_col,
-        vec_col=vec_col,
-        adc_agg=adc_agg,
-        encoding=encoding,
-        perm=perm,
+    return pq_topk_refined(
+        idx, vectors, queries, quantizer, codebooks, k=k, probes=probes,
+        refine=refine, id_col=id_col, vec_col=vec_col, adc_agg=adc_agg,
+        encoding=encoding, perm=perm,
     )

@@ -465,7 +465,7 @@ def start_streaming_semantic_dedup(
 
     def process(batch_df: DataFrame, batch_id: int) -> None:
         ensure_layout(spark, index_root, layout)
-        cell = assign_cells_arrow(centroids, 1)(F.col(vec_col))[0]
+        cell = assign_cells_arrow([centroids], 1)(F.col(vec_col))[0]
         b = (
             batch_df.select(F.col(id_col), F.col(vec_col))
             .withColumn("cell", cell.cast("int"))

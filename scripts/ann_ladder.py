@@ -1,8 +1,8 @@
 #!/usr/bin/env python
 """Per-batch cost ladder for the STREAMING ANN arm (streaming/ann.py):
 feed N fixed-size micro-batches of synthetic embeddings through
-start_streaming_imipq_ingest, timing every batch, and time a fixed
-5-query imipq_topk_live serve after each — the ingest series must
+start_streaming_pq_ingest, timing every batch, and time a fixed
+5-query pq_topk_live serve after each — the ingest series must
 track the BATCH (the loop never reads the index), and the serve series
 is the documented linear-in-probed-cells contract (codes-only rows,
 probes/cells of the corpus), so its growth should be ~linear with a
@@ -40,9 +40,9 @@ def main() -> None:
     from bearysta_spark import get_spark
     from bearysta_spark.functions.similarity import make_pq_codebooks
     from bearysta_spark.streaming.ann import (
-        imipq_index_view,
-        imipq_topk_live,
-        start_streaming_imipq_ingest,
+        pq_index_view,
+        pq_topk_live,
+        start_streaming_pq_ingest,
     )
 
     spark = get_spark(
@@ -78,8 +78,8 @@ def main() -> None:
         stream = spark.readStream.schema(
             "vec_id long, embedding array<float>"
         ).parquet(land)
-        q = start_streaming_imipq_ingest(
-            stream, imi[0], imi[1], cbs, idx, ckpt,
+        q = start_streaming_pq_ingest(
+            stream, imi, cbs, idx, ckpt,
             compact_every=args.compact_every,
         )
         t0 = time.perf_counter()
@@ -88,9 +88,7 @@ def main() -> None:
         ingest_times.append(round(time.perf_counter() - t0, 3))
         if b % args.serve_every == 0 or b == args.batches - 1:
             t0 = time.perf_counter()
-            n = imipq_topk_live(
-                queries, idx, imi[0], imi[1], cbs, k=5, probes=4
-            ).count()
+            n = pq_topk_live(queries, idx, imi, cbs, k=5, probes=4).count()
             serve_times.append(round(time.perf_counter() - t0, 3))
             serve_at.append(b)
             serve_rows.append(n)
@@ -100,7 +98,7 @@ def main() -> None:
             assert n <= 25, n
 
     # vacuity guard: the index really grew N×
-    view = imipq_index_view(spark, idx)
+    view = pq_index_view(spark, idx, imi)
     n_indexed = view.count() if view is not None else 0
     assert n_indexed == args.batches * args.rows, n_indexed
 

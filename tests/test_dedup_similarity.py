@@ -2,6 +2,7 @@
 
 from __future__ import annotations
 
+import pytest
 from pyspark.sql import functions as F
 
 from bearysta_spark.functions import dedup as D
@@ -58,16 +59,23 @@ def test_ivf_recall_vs_exact(spark, embeddings):
         (r["qid"], r["nid"])
         for r in S.brute_force_topk(embeddings, q, k=5).collect()
     }
-    # full probe count == all cells → IVF degenerates to exact search
-    ivf_all = {
-        (r["qid"], r["nid"])
-        for r in S.ivf_topk(embeddings, q, cents.tolist(), k=5, probes=8).collect()
-    }
-    assert ivf_all == exact
+    # full probe count == all cells → the coarse search degenerates to
+    # exact search, for a flat (1-way) and a product (2-way) quantizer
+    halves = [cents[:4, :32].tolist(), cents[:2, 32:].tolist()]
+    for quantizer, cells in (([cents.tolist()], 8), (halves, 8)):
+        all_cells = {
+            (r["qid"], r["nid"])
+            for r in S.coarse_topk(
+                embeddings, q, quantizer, k=5, probes=cells
+            ).collect()
+        }
+        assert all_cells == exact
     # 2-probe recall is partial but sane
     ivf2 = {
         (r["qid"], r["nid"])
-        for r in S.ivf_topk(embeddings, q, cents.tolist(), k=5, probes=2).collect()
+        for r in S.coarse_topk(
+            embeddings, q, [cents.tolist()], k=5, probes=2
+        ).collect()
     }
     assert len(ivf2 & exact) / len(exact) >= 0.3
 
@@ -108,13 +116,15 @@ def test_kmeans_improves_ivf_recall(spark, embeddings):
     exact = {(r["qid"], r["nid"]) for r in S.brute_force_topk(embeddings, q, k=5).collect()}
     ivf_trained = {
         (r["qid"], r["nid"])
-        for r in S.ivf_topk(embeddings, q, cents, k=5, probes=1).collect()
+        for r in S.coarse_topk(embeddings, q, [cents], k=5, probes=1).collect()
     }
     rng = np.random.default_rng(0)
     rand = rng.standard_normal((4, 64)); rand /= np.linalg.norm(rand, axis=1, keepdims=True)
     ivf_rand = {
         (r["qid"], r["nid"])
-        for r in S.ivf_topk(embeddings, q, rand.tolist(), k=5, probes=1).collect()
+        for r in S.coarse_topk(
+            embeddings, q, [rand.tolist()], k=5, probes=1
+        ).collect()
     }
     assert len(ivf_trained & exact) >= len(ivf_rand & exact)
 
@@ -649,24 +659,25 @@ def test_semantic_dedup_no_global_cross_product(spark, embeddings):
 
 
 def test_ivfpq_persisted_index_parity_and_pruning(spark, embeddings, tmp_path):
-    # the persisted IVF-PQ index must (a) return the same neighbors as
-    # the in-memory composition, (b) never read raw vectors at search
-    # time, (c) get dynamic partition pruning on the cell partitions
+    # the persisted 1-way (IVF) PQ index must (a) return the same
+    # neighbors as the in-memory index frame, (b) never read raw
+    # vectors at search time, (c) get dynamic partition pruning on the
+    # ivf_cell partitions
     from bearysta_spark.queries import _IVF_CENTROIDS, _PQ_CODEBOOKS
 
+    ivf = [_IVF_CENTROIDS]
     q = embeddings.filter(F.col("vec_id") < 5)
-    mem = S.ivf_pq_topk(
-        embeddings, q, _IVF_CENTROIDS, _PQ_CODEBOOKS, k=5, probes=2
+    mem = S.pq_topk_from_index(
+        S.pq_index_frame(embeddings, ivf, _PQ_CODEBOOKS), q, ivf,
+        _PQ_CODEBOOKS, k=5, probes=2,
     )
     path = str(tmp_path / "ivfpq")
-    manifest = S.write_ivfpq_index(embeddings, _IVF_CENTROIDS, _PQ_CODEBOOKS, path)
+    manifest = S.write_pq_index(embeddings, ivf, _PQ_CODEBOOKS, path)
     files = manifest.collect()
     assert files and any("ivf_cell=" in r["file"] for r in files)
 
     idx = spark.read.parquet(path)
-    disk = S.ivf_pq_topk_from_index(
-        idx, q, _IVF_CENTROIDS, _PQ_CODEBOOKS, k=5, probes=2
-    )
+    disk = S.pq_topk_from_index(idx, q, ivf, _PQ_CODEBOOKS, k=5, probes=2)
     m = {(r["qid"], r["nid"]): (r["rank"], r["adc"]) for r in mem.collect()}
     d = {(r["qid"], r["nid"]): (r["rank"], r["adc"]) for r in disk.collect()}
     assert set(m) == set(d)
@@ -734,17 +745,15 @@ def test_imipq_persisted_index_pruning_and_cell_exclusivity(
     probe cells."""
     from bearysta_spark.queries import _IMI_CODEBOOKS, _PQ_CODEBOOKS
 
-    cb1, cb2 = _IMI_CODEBOOKS
+    imi = _IMI_CODEBOOKS
     q = embeddings.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "imipq")
-    manifest = S.write_imipq_index(embeddings, cb1, cb2, _PQ_CODEBOOKS, path)
+    manifest = S.write_pq_index(embeddings, imi, _PQ_CODEBOOKS, path)
     files = manifest.collect()
     assert files and any("imi_cell=" in r["file"] for r in files)
 
     idx = spark.read.parquet(path)
-    disk = S.imi_pq_topk_from_index(
-        idx, q, cb1, cb2, _PQ_CODEBOOKS, k=5, probes=4
-    )
+    disk = S.pq_topk_from_index(idx, q, imi, _PQ_CODEBOOKS, k=5, probes=4)
     rows = disk.collect()
     assert rows and all(r["rank"] <= 5 for r in rows)
 
@@ -754,7 +763,7 @@ def test_imipq_persisted_index_pruning_and_cell_exclusivity(
         for r in q.select(
             F.col("vec_id").alias("qid"),
             F.explode(
-                S.assign_imi_cells_arrow(cb1, cb2, 4)(F.col("embedding"))
+                S.assign_cells_arrow(imi, 4)(F.col("embedding"))
             ).alias("imi_cell"),
         ).collect()
     }
@@ -817,25 +826,25 @@ def test_imipq_refined_reorders_and_stays_in_shortlist(
     cosine RESTRICTED to the shortlist."""
     from bearysta_spark.queries import _IMI_CODEBOOKS, _PQ_CODEBOOKS
 
-    cb1, cb2 = _IMI_CODEBOOKS
+    imi = _IMI_CODEBOOKS
     q = embeddings.filter(F.col("vec_id") < 5)
     path = str(tmp_path / "imipq")
-    S.write_imipq_index(embeddings, cb1, cb2, _PQ_CODEBOOKS, path)
+    S.write_pq_index(embeddings, imi, _PQ_CODEBOOKS, path)
     idx = spark.read.parquet(path)
     adc5 = {
         (r.qid, r.rank): r.nid
-        for r in S.imi_pq_topk_from_index(
-            idx, q, cb1, cb2, _PQ_CODEBOOKS, k=5, probes=4
+        for r in S.pq_topk_from_index(
+            idx, q, imi, _PQ_CODEBOOKS, k=5, probes=4
         ).collect()
     }
     short = {
         (r.qid, r.nid)
-        for r in S.imi_pq_topk_from_index(
-            idx, q, cb1, cb2, _PQ_CODEBOOKS, k=15, probes=4
+        for r in S.pq_topk_from_index(
+            idx, q, imi, _PQ_CODEBOOKS, k=15, probes=4
         ).collect()
     }
-    ref = S.imi_pq_topk_refined(
-        idx, embeddings, q, cb1, cb2, _PQ_CODEBOOKS,
+    ref = S.pq_topk_refined(
+        idx, embeddings, q, imi, _PQ_CODEBOOKS,
         k=5, probes=4, refine=15,
     ).collect()
     got = {(r.qid, r.rank): r.nid for r in ref}
@@ -973,18 +982,16 @@ def test_lsh_index_geometry_guard(spark, tmp_path):
 
 
 def test_pq_index_geometry_guards(spark, embeddings, tmp_path):
-    """load_imipq_index / load_ivfpq_index must refuse an index built
-    under a different quantizer geometry (same digest discipline as
-    the streaming arm's imipq_layout guard — a mismatched probe
-    silently returns wrong neighbors)."""
+    """load_pq_index must refuse an index built under a different
+    quantizer geometry, for a 2-way (IMI) and a 1-way (IVF) quantizer
+    (same digest discipline as the streaming arm's layout guard — a
+    mismatched probe silently returns wrong neighbors)."""
     import pytest as _pytest
 
     from bearysta_spark.functions.similarity import (
-        load_imipq_index,
-        load_ivfpq_index,
+        load_pq_index,
         make_pq_codebooks,
-        write_imipq_index,
-        write_ivfpq_index,
+        write_pq_index,
     )
     from bearysta_spark.queries import (
         _IMI_CODEBOOKS,
@@ -992,21 +999,19 @@ def test_pq_index_geometry_guards(spark, embeddings, tmp_path):
         _PQ_CODEBOOKS,
     )
 
-    cb1, cb2 = _IMI_CODEBOOKS
-    p1 = str(tmp_path / "imipq")
-    write_imipq_index(embeddings, cb1, cb2, _PQ_CODEBOOKS, p1)
-    assert load_imipq_index(spark, p1, cb1, cb2, _PQ_CODEBOOKS).count() > 0
     other = make_pq_codebooks(dim=64, m=8, ksub=8, seed=99)
+    for name, quantizer in (("imipq", _IMI_CODEBOOKS),
+                            ("ivfpq", [_IVF_CENTROIDS])):
+        p = str(tmp_path / name)
+        write_pq_index(embeddings, quantizer, _PQ_CODEBOOKS, p)
+        assert load_pq_index(spark, p, quantizer, _PQ_CODEBOOKS).count() > 0
+        with _pytest.raises(ValueError, match="layout mismatch"):
+            load_pq_index(spark, p, quantizer, other)
+    # the same codebooks under the other quantizer refuse too
     with _pytest.raises(ValueError, match="layout mismatch"):
-        load_imipq_index(spark, p1, cb1, cb2, other)
-
-    p2 = str(tmp_path / "ivfpq")
-    write_ivfpq_index(embeddings, _IVF_CENTROIDS, _PQ_CODEBOOKS, p2)
-    assert load_ivfpq_index(
-        spark, p2, _IVF_CENTROIDS, _PQ_CODEBOOKS
-    ).count() > 0
-    with _pytest.raises(ValueError, match="layout mismatch"):
-        load_ivfpq_index(spark, p2, _IVF_CENTROIDS, other)
+        load_pq_index(
+            spark, str(tmp_path / "imipq"), [_IVF_CENTROIDS], _PQ_CODEBOOKS
+        )
 
 
 def test_residual_encoding_guard_and_index_rows(spark, embeddings, tmp_path):
@@ -1020,16 +1025,16 @@ def test_residual_encoding_guard_and_index_rows(spark, embeddings, tmp_path):
 
     from bearysta_spark.queries import _IMI_CODEBOOKS, _PQ_CODEBOOKS
 
-    cb1, cb2 = _IMI_CODEBOOKS
+    imi = _IMI_CODEBOOKS
     praw = str(tmp_path / "imipq_raw")
     pres = str(tmp_path / "imipq_res")
-    S.write_imipq_index(embeddings, cb1, cb2, _PQ_CODEBOOKS, praw)
-    S.write_imipq_index(
-        embeddings, cb1, cb2, _PQ_CODEBOOKS, pres, encoding="residual"
+    S.write_pq_index(embeddings, imi, _PQ_CODEBOOKS, praw)
+    S.write_pq_index(
+        embeddings, imi, _PQ_CODEBOOKS, pres, encoding="residual"
     )
-    raw = S.load_imipq_index(spark, praw, cb1, cb2, _PQ_CODEBOOKS)
-    res = S.load_imipq_index(
-        spark, pres, cb1, cb2, _PQ_CODEBOOKS, encoding="residual"
+    raw = S.load_pq_index(spark, praw, imi, _PQ_CODEBOOKS)
+    res = S.load_pq_index(
+        spark, pres, imi, _PQ_CODEBOOKS, encoding="residual"
     )
     # cells identical (same coarse quantizer), codes differ (different
     # quantization rule), layout identical
@@ -1040,28 +1045,28 @@ def test_residual_encoding_guard_and_index_rows(spark, embeddings, tmp_path):
     assert any(r[v][1] != e[v][1] for v in r)
     # cross-encoding loads refuse
     with _pytest.raises(ValueError, match="layout mismatch"):
-        S.load_imipq_index(
-            spark, praw, cb1, cb2, _PQ_CODEBOOKS, encoding="residual"
+        S.load_pq_index(
+            spark, praw, imi, _PQ_CODEBOOKS, encoding="residual"
         )
     with _pytest.raises(ValueError, match="layout mismatch"):
-        S.load_imipq_index(spark, pres, cb1, cb2, _PQ_CODEBOOKS)
+        S.load_pq_index(spark, pres, imi, _PQ_CODEBOOKS)
     with _pytest.raises(ValueError, match="encoding"):
-        S.write_imipq_index(
-            embeddings, cb1, cb2, _PQ_CODEBOOKS,
+        S.write_pq_index(
+            embeddings, imi, _PQ_CODEBOOKS,
             str(tmp_path / "x"), encoding="pq",
         )
-    # flat-IVF twin
+    # 1-way (flat IVF) quantizer
     from bearysta_spark.queries import _IVF_CENTROIDS
 
     pivf = str(tmp_path / "ivfpq_res")
-    S.write_ivfpq_index(
-        embeddings, _IVF_CENTROIDS, _PQ_CODEBOOKS, pivf, encoding="residual"
+    S.write_pq_index(
+        embeddings, [_IVF_CENTROIDS], _PQ_CODEBOOKS, pivf, encoding="residual"
     )
-    assert S.load_ivfpq_index(
-        spark, pivf, _IVF_CENTROIDS, _PQ_CODEBOOKS, encoding="residual"
+    assert S.load_pq_index(
+        spark, pivf, [_IVF_CENTROIDS], _PQ_CODEBOOKS, encoding="residual"
     ).count() == embeddings.count()
     with _pytest.raises(ValueError, match="layout mismatch"):
-        S.load_ivfpq_index(spark, pivf, _IVF_CENTROIDS, _PQ_CODEBOOKS)
+        S.load_pq_index(spark, pivf, [_IVF_CENTROIDS], _PQ_CODEBOOKS)
 
 
 def test_residual_adc_matches_numpy_reference(spark, embeddings, tmp_path):
@@ -1075,17 +1080,17 @@ def test_residual_adc_matches_numpy_reference(spark, embeddings, tmp_path):
 
     cb1, cb2 = _IMI_CODEBOOKS
     path = str(tmp_path / "imipq_res")
-    S.write_imipq_index(
-        embeddings, cb1, cb2, _PQ_CODEBOOKS, path, encoding="residual"
+    S.write_pq_index(
+        embeddings, _IMI_CODEBOOKS, _PQ_CODEBOOKS, path, encoding="residual"
     )
-    idx = S.load_imipq_index(
-        spark, path, cb1, cb2, _PQ_CODEBOOKS, encoding="residual"
+    idx = S.load_pq_index(
+        spark, path, _IMI_CODEBOOKS, _PQ_CODEBOOKS, encoding="residual"
     )
     q = embeddings.filter(F.col("vec_id") < 3)
     got = {
         (r["qid"], r["nid"]): r["adc"]
-        for r in S.imi_pq_topk_from_index(
-            idx, q, cb1, cb2, _PQ_CODEBOOKS, k=10_000, probes=4,
+        for r in S.pq_topk_from_index(
+            idx, q, _IMI_CODEBOOKS, _PQ_CODEBOOKS, k=10_000, probes=4,
             encoding="residual",
         ).collect()
     }
@@ -1127,34 +1132,42 @@ def test_residual_adc_matches_numpy_reference(spark, embeddings, tmp_path):
 
 
 def test_probe_sweep_equals_standalone_searches(spark, embeddings):
-    """imi_pq_probe_sweep (score once at max probes, rank-filter per
-    grid point) must return exactly the standalone
-    imi_pq_topk_from_index result at every probes value, both
-    encodings — the audit sweep may not drift from the serving path."""
+    """pq_probe_sweep (score once at max probes, rank-filter per grid
+    point) must return exactly the standalone pq_topk_from_index
+    result at every probes value, both encodings, under a 2-way and a
+    1-way quantizer — the audit sweep may not drift from the serving
+    path."""
     from bearysta_spark.functions.similarity import (
-        imi_pq_index_frame,
-        imi_pq_probe_sweep,
+        pq_index_frame,
+        pq_probe_sweep,
     )
-    from bearysta_spark.queries import _IMI_CODEBOOKS, _PQ_CODEBOOKS
+    from bearysta_spark.queries import (
+        _IMI_CODEBOOKS,
+        _IVF_CENTROIDS,
+        _PQ_CODEBOOKS,
+    )
 
-    cb1, cb2 = _IMI_CODEBOOKS
     q = embeddings.filter(F.col("vec_id") < 5)
-    for enc in ("raw", "residual"):
-        idx = imi_pq_index_frame(
-            embeddings, cb1, cb2, _PQ_CODEBOOKS, encoding=enc
+    for quantizer, enc in (
+        (_IMI_CODEBOOKS, "raw"),
+        (_IMI_CODEBOOKS, "residual"),
+        ([_IVF_CENTROIDS], "residual"),
+    ):
+        idx = pq_index_frame(
+            embeddings, quantizer, _PQ_CODEBOOKS, encoding=enc
         ).cache()
         sweep = {
             (r["probes"], r["qid"], r["nid"])
-            for r in imi_pq_probe_sweep(
-                idx, q, cb1, cb2, _PQ_CODEBOOKS,
+            for r in pq_probe_sweep(
+                idx, q, quantizer, _PQ_CODEBOOKS,
                 probes_list=(1, 2, 4), k=5, encoding=enc,
             ).collect()
         }
         for p in (1, 2, 4):
             alone = {
                 (p, r["qid"], r["nid"])
-                for r in S.imi_pq_topk_from_index(
-                    idx, q, cb1, cb2, _PQ_CODEBOOKS, k=5, probes=p,
+                for r in S.pq_topk_from_index(
+                    idx, q, quantizer, _PQ_CODEBOOKS, k=5, probes=p,
                     encoding=enc,
                 ).collect()
             }
@@ -1183,7 +1196,8 @@ def test_pq_codebooks_fit_deterministic_and_partition_invariant(
 
 
 def test_imi_residual_frame_matches_numpy(spark, embeddings):
-    """imi_residual_frame (the expression-path training residual):
+    """residual_frame under a 2-way quantizer (the expression-path
+    training residual):
     r = v − concat(cb1_i, cb2_j) with per-half max-dot assignment,
     ties to the higher cell."""
     import numpy as np
@@ -1193,7 +1207,7 @@ def test_imi_residual_frame_matches_numpy(spark, embeddings):
     cb1, cb2 = _IMI_CODEBOOKS
     got = {
         r["vec_id"]: np.array(r["residual"])
-        for r in S.imi_residual_frame(embeddings, cb1, cb2).collect()
+        for r in S.residual_frame(embeddings, [cb1, cb2]).collect()
     }
     rows = embeddings.select("vec_id", "embedding").collect()
     C1 = np.asarray(cb1); C2 = np.asarray(cb2)
@@ -1280,13 +1294,12 @@ def test_interrupted_index_write_refused_legacy_still_admitted(
     # same discipline on the PQ loader
     from bearysta_spark.queries import _IMI_CODEBOOKS, _PQ_CODEBOOKS
 
-    cb1, cb2 = _IMI_CODEBOOKS
     p4 = str(tmp_path / "imipq_crash")
-    S.write_imipq_index(embeddings, cb1, cb2, _PQ_CODEBOOKS, p4)
+    S.write_pq_index(embeddings, _IMI_CODEBOOKS, _PQ_CODEBOOKS, p4)
     os.unlink(os.path.join(p4, LAYOUT))
     mark_pending_write(spark, p4, {"x": 1})
     with _pytest.raises(ValueError, match="pending-write"):
-        S.load_imipq_index(spark, p4, cb1, cb2, _PQ_CODEBOOKS)
+        S.load_pq_index(spark, p4, _IMI_CODEBOOKS, _PQ_CODEBOOKS)
 
 
 def test_pq_codebooks_fit_dim_guard(spark, embeddings):
@@ -1361,8 +1374,8 @@ def test_opq_encoding_guard_and_roundrobin_perm(spark, embeddings, tmp_path):
     from bearysta_spark.functions.similarity import opq_roundrobin_perm
     from bearysta_spark.queries import _IMI_CODEBOOKS, _PQ_CODEBOOKS
 
-    cb1, cb2 = _IMI_CODEBOOKS
-    res = S.imi_residual_frame(embeddings, cb1, cb2)
+    imi = _IMI_CODEBOOKS
+    res = S.residual_frame(embeddings, imi)
     perm = opq_roundrobin_perm(res, m=8)
     assert sorted(perm) == list(range(64))
     # round-robin property: position p//8 identifies the subspace;
@@ -1370,12 +1383,12 @@ def test_opq_encoding_guard_and_roundrobin_perm(spark, embeddings, tmp_path):
     assert len(perm) == 64
 
     popq = str(tmp_path / "imipq_opq")
-    S.write_imipq_index(
-        embeddings, cb1, cb2, _PQ_CODEBOOKS, popq,
+    S.write_pq_index(
+        embeddings, imi, _PQ_CODEBOOKS, popq,
         encoding="opq", perm=perm,
     )
-    idx = S.load_imipq_index(
-        spark, popq, cb1, cb2, _PQ_CODEBOOKS, encoding="opq", perm=perm
+    idx = S.load_pq_index(
+        spark, popq, imi, _PQ_CODEBOOKS, encoding="opq", perm=perm
     )
     assert idx.count() == embeddings.count()
     # a DIFFERENT perm refuses; residual/raw probes of an opq index
@@ -1383,31 +1396,195 @@ def test_opq_encoding_guard_and_roundrobin_perm(spark, embeddings, tmp_path):
     perm2 = list(perm)
     perm2[0], perm2[1] = perm2[1], perm2[0]
     with _pytest.raises(ValueError, match="layout mismatch"):
-        S.load_imipq_index(
-            spark, popq, cb1, cb2, _PQ_CODEBOOKS,
+        S.load_pq_index(
+            spark, popq, imi, _PQ_CODEBOOKS,
             encoding="opq", perm=perm2,
         )
     with _pytest.raises(ValueError, match="layout mismatch"):
-        S.load_imipq_index(
-            spark, popq, cb1, cb2, _PQ_CODEBOOKS, encoding="residual"
+        S.load_pq_index(
+            spark, popq, imi, _PQ_CODEBOOKS, encoding="residual"
         )
     pres = str(tmp_path / "imipq_res2")
-    S.write_imipq_index(
-        embeddings, cb1, cb2, _PQ_CODEBOOKS, pres, encoding="residual"
+    S.write_pq_index(
+        embeddings, imi, _PQ_CODEBOOKS, pres, encoding="residual"
     )
     with _pytest.raises(ValueError, match="layout mismatch"):
-        S.load_imipq_index(
-            spark, pres, cb1, cb2, _PQ_CODEBOOKS,
+        S.load_pq_index(
+            spark, pres, imi, _PQ_CODEBOOKS,
             encoding="opq", perm=perm,
         )
     # API misuse refuses before any IO
     with _pytest.raises(ValueError, match="opq"):
-        S.write_imipq_index(
-            embeddings, cb1, cb2, _PQ_CODEBOOKS,
+        S.write_pq_index(
+            embeddings, imi, _PQ_CODEBOOKS,
             str(tmp_path / "x1"), encoding="opq",
         )
     with _pytest.raises(ValueError, match="perm"):
-        S.imi_pq_index_frame(
-            embeddings, cb1, cb2, _PQ_CODEBOOKS,
+        S.pq_index_frame(
+            embeddings, imi, _PQ_CODEBOOKS,
             encoding="residual", perm=perm,
         )
+
+
+def _quantizer(name):
+    """The registered coarse quantizers as subspace-codebook lists:
+    flat IVF (1-way) and the inverted multi-index (2-way)."""
+    from bearysta_spark.queries import _IMI_CODEBOOKS, _IVF_CENTROIDS
+
+    return {"ivf": [_IVF_CENTROIDS], "imi": _IMI_CODEBOOKS}[name]
+
+
+def _cell_tuples(quantizer):
+    """Every per-subspace cell tuple in row-major order: the flat cell
+    id is the tuple's position in this list."""
+    import itertools
+
+    return list(itertools.product(*[range(len(cb)) for cb in quantizer]))
+
+
+def _ref_flat_scores(M, quantizer):
+    """numpy reference for the coarse cell scores: score of a flat
+    cell = sum of its per-subspace slice dot products."""
+    import numpy as np
+
+    offs = np.cumsum([0] + [len(cb[0]) for cb in quantizer])
+    tuples = _cell_tuples(quantizer)
+    out = np.empty((len(M), len(tuples)))
+    for flat, cell in enumerate(tuples):
+        out[:, flat] = sum(
+            M[:, offs[b]:offs[b + 1]] @ np.asarray(quantizer[b][i])
+            for b, i in enumerate(cell)
+        )
+    return out
+
+
+@pytest.mark.parametrize("name", ["ivf", "imi"])
+def test_assign_cells_kernel_matches_numpy_reference(spark, embeddings, name):
+    """The one coarse-assignment kernel, on a 1-way and a 2-way
+    quantizer: the top-`probes` flat cells are the reference's
+    highest-scoring cells in descending order, and with_qc returns
+    each probed cell's score as its qc offset."""
+    import numpy as np
+
+    quantizer = _quantizer(name)
+    rows = embeddings.filter(F.col("vec_id") < 40).select(
+        "vec_id",
+        S.assign_cells_arrow(quantizer, 4)(F.col("embedding")).alias("c"),
+        S.assign_cells_arrow(quantizer, 4, with_qc=True)(
+            F.col("embedding")
+        ).alias("cq"),
+        "embedding",
+    ).collect()
+    M = np.array([list(r["embedding"]) for r in rows], dtype=np.float64)
+    ref = _ref_flat_scores(M, quantizer)
+    for r, want in zip(rows, ref):
+        cells = list(r["c"])
+        assert [x["cell"] for x in r["cq"]] == cells
+        assert np.allclose(want[cells], np.sort(want)[::-1][:4], atol=1e-12)
+        assert np.allclose([x["qc"] for x in r["cq"]], want[cells], atol=1e-12)
+
+
+def test_assign_cells_kernel_ties_go_to_lower_flat_cell(spark):
+    """Constructed exact score ties resolve to the lower FLAT cell id,
+    for a 1-way quantizer and for a 2-way one (where tied cells come
+    from different per-subspace pairs)."""
+    vecs = spark.createDataFrame(
+        [(1, [1.0, 0.0]), (2, [0.0, 2.0]), (3, [1.0, 1.0])],
+        "vec_id long, embedding array<double>",
+    )
+    flat = [[[1.0, 0.0], [0.0, 1.0], [1.0, 0.0], [0.5, 0.5]]]
+    # 2-way: s1 = (1, 1), s2 = (1, 2, 1) for [1, 1] -> flat scores
+    # (2, 3, 2, 2, 3, 2) over cells i*3 + j
+    product = [[[1.0], [1.0]], [[1.0], [2.0], [1.0]]]
+    got = {
+        (r["vec_id"], n): (list(r["c"]), [(x["cell"], x["qc"]) for x in r["q"]])
+        for n, quantizer in (("flat", flat), ("imi", product))
+        for r in vecs.select(
+            "vec_id",
+            S.assign_cells_arrow(quantizer, 4)(F.col("embedding")).alias("c"),
+            S.assign_cells_arrow(quantizer, 4, with_qc=True)(
+                F.col("embedding")
+            ).alias("q"),
+        ).collect()
+    }
+    assert got[(1, "flat")][0] == [0, 2, 3, 1]
+    assert got[(2, "flat")][0] == [1, 3, 0, 2]
+    assert got[(3, "imi")] == (
+        [1, 4, 0, 2], [(1, 3.0), (4, 3.0), (0, 2.0), (2, 2.0)]
+    )
+
+
+@pytest.mark.parametrize("name", ["ivf", "imi"])
+def test_cell_residual_codes_kernel_matches_numpy_reference(
+    spark, embeddings, name
+):
+    """The one residual encode kernel, on a 1-way and a 2-way
+    quantizer, with and without an OPQ permutation: the row is stored
+    under the top-1 coarse cell, and the codes are the per-subspace L2
+    argmin of the (permuted) residual x − centroid(cell), the centroid
+    being the concatenation of the cell's per-subspace centroids."""
+    import numpy as np
+
+    from bearysta_spark.queries import _PQ_CODEBOOKS
+
+    quantizer = _quantizer(name)
+    CB = np.asarray(_PQ_CODEBOOKS)
+    m, _, dsub = CB.shape
+    perm = [(7 * p) % 64 for p in range(64)]
+    df = embeddings.filter(F.col("vec_id") < 40)
+    for P in (None, perm):
+        rows = df.select(
+            S.assign_cells_arrow(quantizer, 1)(F.col("embedding"))[0]
+            .alias("cell"),
+            S.cell_residual_codes_arrow(quantizer, _PQ_CODEBOOKS, P)(
+                F.col("embedding")
+            ).alias("cc"),
+            "embedding",
+        ).collect()
+        tuples = _cell_tuples(quantizer)
+        for r in rows:
+            cell, codes = r["cc"][0], list(r["cc"][1:])
+            assert cell == r["cell"]
+            cent = np.concatenate(
+                [np.asarray(quantizer[b][i]) for b, i in enumerate(tuples[cell])]
+            )
+            res = np.asarray(r["embedding"], dtype=np.float64) - cent
+            if P is not None:
+                res = res[P]
+            want = [
+                int(np.argmin(np.linalg.norm(
+                    CB[j] - res[j * dsub:(j + 1) * dsub], axis=1
+                )))
+                for j in range(m)
+            ]
+            assert codes == want, (P is not None, cell)
+
+
+def test_pq_layout_json_is_stable_for_existing_indexes():
+    """Indexes already on disk must stay loadable, so pq_layout must
+    serialize to exactly the JSON their _layout.json files hold: the
+    2-way (`k1`/`k2`) and 1-way (`cells`) forms below are the values
+    persisted IVF-PQ and IMI-PQ indexes carry for this input."""
+    import json
+
+    cb1 = [[1.0, 0.0], [0.0, 1.0], [0.6, 0.8]]
+    cb2 = [[0.5, -0.5], [0.25, 1.0]]
+    cbs = [[[1.0, 0.0], [0.0, 1.0]], [[0.5, 0.5], [-1.0, 2.0]]]
+    md5 = "27133aa8a3951cb8301b523946769082"
+    assert json.dumps(S.pq_layout([cb1, cb2], cbs)) == (
+        '{"k1": 3, "k2": 2, "m": 2, "codebooks_md5": "%s", '
+        '"encoding": "raw"}' % md5
+    )
+    assert json.dumps(
+        S.pq_layout([cb1, cb2], cbs, "opq", perm=[3, 1, 2, 0])
+    ) == (
+        '{"k1": 3, "k2": 2, "m": 2, "codebooks_md5": "%s", '
+        '"encoding": "opq", "perm": [3, 1, 2, 0]}' % md5
+    )
+    assert json.dumps(S.pq_layout([cb1], cbs, "residual")) == (
+        '{"cells": 3, "m": 2, "codebooks_md5": '
+        '"aebdcfe69695cb7fbb28520e13466fa5", "encoding": "residual"}'
+    )
+    # a bare centroid table is not a quantizer
+    with pytest.raises(ValueError, match="list of subspace codebooks"):
+        S.assign_cells_arrow(cb1)

@@ -17,7 +17,7 @@ SF = "/root/testdata/sf0.001"
 def _geometry():
     from bearysta_spark.queries import _IMI_CODEBOOKS, _PQ_CODEBOOKS
 
-    return _IMI_CODEBOOKS[0], _IMI_CODEBOOKS[1], _PQ_CODEBOOKS
+    return _IMI_CODEBOOKS, _PQ_CODEBOOKS
 
 
 def _feed(spark, land, lo, hi):
@@ -31,14 +31,14 @@ def _feed(spark, land, lo, hi):
     )
 
 
-def _run_once(spark, land, idx, ckpt, cb1, cb2, cbs, compact_every=None):
-    from bearysta_spark.streaming.ann import start_streaming_imipq_ingest
+def _run_once(spark, land, idx, ckpt, imi, cbs, compact_every=None):
+    from bearysta_spark.streaming.ann import start_streaming_pq_ingest
 
     stream = spark.readStream.schema(
         "vec_id long, embedding array<float>"
     ).parquet(land)
-    q = start_streaming_imipq_ingest(
-        stream, cb1, cb2, cbs, idx, ckpt, compact_every=compact_every
+    q = start_streaming_pq_ingest(
+        stream, imi, cbs, idx, ckpt, compact_every=compact_every
     )
     try:
         q.processAllAvailable()
@@ -46,26 +46,26 @@ def _run_once(spark, land, idx, ckpt, cb1, cb2, cbs, compact_every=None):
         q.stop()
 
 
-def _serve(spark, idx, cb1, cb2, cbs):
+def _serve(spark, idx, imi, cbs):
     from bearysta_spark.queries import dsum
-    from bearysta_spark.streaming.ann import imipq_topk_live
+    from bearysta_spark.streaming.ann import pq_topk_live
 
     q = (
         spark.read.parquet(f"{SF}/embeddings.parquet")
         .filter(F.col("vec_id") < 5)
         .select("vec_id", "embedding")
     )
-    out = imipq_topk_live(
-        q, idx, cb1, cb2, cbs, k=5, probes=4,
+    out = pq_topk_live(
+        q, idx, imi, cbs, k=5, probes=4,
         adc_agg=lambda c: dsum(c, 4),
     )
     return {(r.qid, r.rank): (r.nid, float(r.adc)) for r in out.collect()}
 
 
-def _batch_reference(spark, cb1, cb2, cbs, hi, tmp):
+def _batch_reference(spark, imi, cbs, hi, tmp):
     from bearysta_spark.functions.similarity import (
-        imi_pq_topk_from_index,
-        write_imipq_index,
+        pq_topk_from_index,
+        write_pq_index,
     )
     from bearysta_spark.queries import dsum
 
@@ -75,9 +75,9 @@ def _batch_reference(spark, cb1, cb2, cbs, hi, tmp):
         .select("vec_id", "embedding")
     )
     q = e.filter(F.col("vec_id") < 5)
-    write_imipq_index(e, cb1, cb2, cbs, tmp)
-    out = imi_pq_topk_from_index(
-        spark.read.parquet(tmp), q, cb1, cb2, cbs, k=5, probes=4,
+    write_pq_index(e, imi, cbs, tmp)
+    out = pq_topk_from_index(
+        spark.read.parquet(tmp), q, imi, cbs, k=5, probes=4,
         adc_agg=lambda c: dsum(c, 4),
     )
     return {(r.qid, r.rank): (r.nid, float(r.adc)) for r in out.collect()}
@@ -89,45 +89,45 @@ def test_streaming_imipq_matches_batch_with_replay_and_compaction(
     from bearysta_spark.streaming.index import compact_index, read_marker
 
     land, idx, ckpt = (str(tmp_path / d) for d in ("land", "idx", "ckpt"))
-    cb1, cb2, cbs = _geometry()
+    imi, cbs = _geometry()
 
     _feed(spark, land, 0, 150)
-    _run_once(spark, land, idx, ckpt, cb1, cb2, cbs)
+    _run_once(spark, land, idx, ckpt, imi, cbs)
     _feed(spark, land, 150, 300)
-    _run_once(spark, land, idx, ckpt, cb1, cb2, cbs)
+    _run_once(spark, land, idx, ckpt, imi, cbs)
     _truncate_last_commit(ckpt)  # die between execute and commit
     # replay batch 1 (partition overwrite, no duplicate codes), fold
     # batches 0-1, then grow past the compacted tier
-    _run_once(spark, land, idx, ckpt, cb1, cb2, cbs)
+    _run_once(spark, land, idx, ckpt, imi, cbs)
     compact_index(spark, idx, 2, partition_cols=("batch_id", "imi_cell"))
     assert read_marker(idx) == {"tier": -2, "upto": 2}
     _feed(spark, land, 300, 500)
-    _run_once(spark, land, idx, ckpt, cb1, cb2, cbs)
+    _run_once(spark, land, idx, ckpt, imi, cbs)
 
-    from bearysta_spark.streaming.ann import imipq_index_view
+    from bearysta_spark.streaming.ann import pq_index_view
 
-    view = imipq_index_view(spark, idx)
+    view = pq_index_view(spark, idx, imi)
     assert view.count() == 500  # replay overwrote, never duplicated
-    got = _serve(spark, idx, cb1, cb2, cbs)
+    got = _serve(spark, idx, imi, cbs)
     want = _batch_reference(
-        spark, cb1, cb2, cbs, 500, str(tmp_path / "batchidx")
+        spark, imi, cbs, 500, str(tmp_path / "batchidx")
     )
     assert got == want
     assert len({q for q, _ in got}) == 5  # every query served k rows
 
 
-def _serve_refined(spark, idx, cb1, cb2, cbs):
+def _serve_refined(spark, idx, imi, cbs):
     from bearysta_spark.cachescope import cache_scope
     from bearysta_spark.queries import dsum
-    from bearysta_spark.streaming.ann import imipq_topk_refined_live
+    from bearysta_spark.streaming.ann import pq_topk_refined_live
 
     e = spark.read.parquet(f"{SF}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     q = e.filter(F.col("vec_id") < 5)
     with cache_scope():
-        out = imipq_topk_refined_live(
-            q, idx, e, cb1, cb2, cbs, k=5, probes=4, refine=15,
+        out = pq_topk_refined_live(
+            q, idx, e, imi, cbs, k=5, probes=4, refine=15,
             adc_agg=lambda c: dsum(c, 4),
         )
         return {(r.qid, r.rank): (r.nid, float(r.sim)) for r in out.collect()}
@@ -143,34 +143,34 @@ def test_streaming_imipq_refined_matches_batch_with_replay_and_compaction(
     and the exact rerank reads the same raw-vector store."""
     from bearysta_spark.cachescope import cache_scope
     from bearysta_spark.functions.similarity import (
-        imi_pq_topk_refined,
-        write_imipq_index,
+        pq_topk_refined,
+        write_pq_index,
     )
     from bearysta_spark.queries import dsum
     from bearysta_spark.streaming.index import compact_index
 
     land, idx, ckpt = (str(tmp_path / d) for d in ("land", "idx", "ckpt"))
-    cb1, cb2, cbs = _geometry()
+    imi, cbs = _geometry()
     _feed(spark, land, 0, 150)
-    _run_once(spark, land, idx, ckpt, cb1, cb2, cbs)
+    _run_once(spark, land, idx, ckpt, imi, cbs)
     _feed(spark, land, 150, 300)
-    _run_once(spark, land, idx, ckpt, cb1, cb2, cbs)
+    _run_once(spark, land, idx, ckpt, imi, cbs)
     _truncate_last_commit(ckpt)  # die between execute and commit
-    _run_once(spark, land, idx, ckpt, cb1, cb2, cbs)  # replay batch 1
+    _run_once(spark, land, idx, ckpt, imi, cbs)  # replay batch 1
     compact_index(spark, idx, 2, partition_cols=("batch_id", "imi_cell"))
     _feed(spark, land, 300, 500)
-    _run_once(spark, land, idx, ckpt, cb1, cb2, cbs)
+    _run_once(spark, land, idx, ckpt, imi, cbs)
 
-    got = _serve_refined(spark, idx, cb1, cb2, cbs)
+    got = _serve_refined(spark, idx, imi, cbs)
     e = spark.read.parquet(f"{SF}/embeddings.parquet").select(
         "vec_id", "embedding"
     )
     q = e.filter(F.col("vec_id") < 5)
     bpath = str(tmp_path / "batchidx")
-    write_imipq_index(e, cb1, cb2, cbs, bpath)
+    write_pq_index(e, imi, cbs, bpath)
     with cache_scope():
-        ref = imi_pq_topk_refined(
-            spark.read.parquet(bpath), e, q, cb1, cb2, cbs,
+        ref = pq_topk_refined(
+            spark.read.parquet(bpath), e, q, imi, cbs,
             k=5, probes=4, refine=15, adc_agg=lambda c: dsum(c, 4),
         )
         want = {(r.qid, r.rank): (r.nid, float(r.sim)) for r in ref.collect()}
@@ -182,36 +182,36 @@ def test_streaming_imipq_refined_layout_guard(spark, tmp_path):
     from bearysta_spark.functions.similarity import make_pq_codebooks
 
     land, idx, ckpt = (str(tmp_path / d) for d in ("land", "idx", "ckpt"))
-    cb1, cb2, cbs = _geometry()
+    imi, cbs = _geometry()
     _feed(spark, land, 0, 100)
-    _run_once(spark, land, idx, ckpt, cb1, cb2, cbs)
+    _run_once(spark, land, idx, ckpt, imi, cbs)
     other = make_pq_codebooks(dim=64, m=8, ksub=8, seed=99)
     with pytest.raises(ValueError, match="layout mismatch"):
-        _serve_refined(spark, idx, cb1, cb2, other)
+        _serve_refined(spark, idx, imi, other)
 
 
 def test_streaming_imipq_layout_guard(spark, tmp_path):
     from bearysta_spark.functions.similarity import make_pq_codebooks
 
     land, idx, ckpt = (str(tmp_path / d) for d in ("land", "idx", "ckpt"))
-    cb1, cb2, cbs = _geometry()
+    imi, cbs = _geometry()
     _feed(spark, land, 0, 100)
-    _run_once(spark, land, idx, ckpt, cb1, cb2, cbs)
+    _run_once(spark, land, idx, ckpt, imi, cbs)
     other = make_pq_codebooks(dim=64, m=8, ksub=8, seed=99)
     # growing under a different geometry must fail loudly
     _feed(spark, land, 100, 200)
     with pytest.raises(Exception, match="layout mismatch"):
         _run_once(spark, land, idx, str(tmp_path / "ckpt2"),
-                  cb1, cb2, other)
+                  imi, other)
     # serving under a different geometry must fail loudly too
     with pytest.raises(ValueError, match="layout mismatch"):
-        _serve(spark, idx, cb1, cb2, other)
+        _serve(spark, idx, imi, other)
 
 
 def test_streaming_imipq_serve_empty_raises(spark, tmp_path):
-    cb1, cb2, cbs = _geometry()
+    imi, cbs = _geometry()
     with pytest.raises(ValueError, match="no committed rows"):
-        _serve(spark, str(tmp_path / "noidx"), cb1, cb2, cbs)
+        _serve(spark, str(tmp_path / "noidx"), imi, cbs)
 
 
 def test_streaming_imipq_auto_compaction(spark, tmp_path):
@@ -220,15 +220,15 @@ def test_streaming_imipq_auto_compaction(spark, tmp_path):
     from bearysta_spark.streaming.index import read_marker
 
     land, idx, ckpt = (str(tmp_path / d) for d in ("land", "idx", "ckpt"))
-    cb1, cb2, cbs = _geometry()
+    imi, cbs = _geometry()
     for lo, hi in ((0, 150), (150, 300), (300, 500)):
         _feed(spark, land, lo, hi)
-        _run_once(spark, land, idx, ckpt, cb1, cb2, cbs, compact_every=2)
+        _run_once(spark, land, idx, ckpt, imi, cbs, compact_every=2)
     m = read_marker(idx)
     assert m is not None and m["upto"] == 2
-    got = _serve(spark, idx, cb1, cb2, cbs)
+    got = _serve(spark, idx, imi, cbs)
     want = _batch_reference(
-        spark, cb1, cb2, cbs, 500, str(tmp_path / "batchidx")
+        spark, imi, cbs, 500, str(tmp_path / "batchidx")
     )
     assert got == want
 
@@ -240,19 +240,19 @@ def test_streaming_imipq_residual_matches_batch_and_guards(spark, tmp_path):
     the layout — a raw-configured stream refuses to grow a residual
     index, and a raw serve refuses to read one."""
     from bearysta_spark.functions.similarity import (
-        imi_pq_topk_from_index,
-        write_imipq_index,
+        pq_topk_from_index,
+        write_pq_index,
     )
     from bearysta_spark.queries import dsum
-    from bearysta_spark.streaming.ann import imipq_topk_live
+    from bearysta_spark.streaming.ann import pq_topk_live
 
     land, idx, ckpt = (str(tmp_path / d) for d in ("land", "idx", "ckpt"))
-    cb1, cb2, cbs = _geometry()
+    imi, cbs = _geometry()
 
     _feed(spark, land, 0, 200)
-    _run_once_enc(spark, land, idx, ckpt, cb1, cb2, cbs, "residual")
+    _run_once_enc(spark, land, idx, ckpt, imi, cbs, "residual")
     _feed(spark, land, 200, 500)
-    _run_once_enc(spark, land, idx, ckpt, cb1, cb2, cbs, "residual")
+    _run_once_enc(spark, land, idx, ckpt, imi, cbs, "residual")
 
     e = (
         spark.read.parquet(f"{SF}/embeddings.parquet")
@@ -261,17 +261,17 @@ def test_streaming_imipq_residual_matches_batch_and_guards(spark, tmp_path):
     q = e.filter(F.col("vec_id") < 5)
     got = {
         (r.qid, r.rank): (r.nid, float(r.adc))
-        for r in imipq_topk_live(
-            q, idx, cb1, cb2, cbs, k=5, probes=4,
+        for r in pq_topk_live(
+            q, idx, imi, cbs, k=5, probes=4,
             adc_agg=lambda c: dsum(c, 4), encoding="residual",
         ).collect()
     }
     bpath = str(tmp_path / "batchidx")
-    write_imipq_index(e, cb1, cb2, cbs, bpath, encoding="residual")
+    write_pq_index(e, imi, cbs, bpath, encoding="residual")
     want = {
         (r.qid, r.rank): (r.nid, float(r.adc))
-        for r in imi_pq_topk_from_index(
-            spark.read.parquet(bpath), q, cb1, cb2, cbs, k=5, probes=4,
+        for r in pq_topk_from_index(
+            spark.read.parquet(bpath), q, imi, cbs, k=5, probes=4,
             adc_agg=lambda c: dsum(c, 4), encoding="residual",
         ).collect()
     }
@@ -280,20 +280,20 @@ def test_streaming_imipq_residual_matches_batch_and_guards(spark, tmp_path):
     # raw-configured ingest refuses the residual index's layout
     _feed(spark, land, 500, 510)
     with pytest.raises(Exception, match="layout"):
-        _run_once(spark, land, idx, str(tmp_path / "ckpt2"), cb1, cb2, cbs)
+        _run_once(spark, land, idx, str(tmp_path / "ckpt2"), imi, cbs)
     # raw serve refuses too
     with pytest.raises(ValueError, match="layout mismatch"):
-        imipq_topk_live(q, idx, cb1, cb2, cbs, k=5, probes=4)
+        pq_topk_live(q, idx, imi, cbs, k=5, probes=4)
 
 
-def _run_once_enc(spark, land, idx, ckpt, cb1, cb2, cbs, encoding):
-    from bearysta_spark.streaming.ann import start_streaming_imipq_ingest
+def _run_once_enc(spark, land, idx, ckpt, imi, cbs, encoding):
+    from bearysta_spark.streaming.ann import start_streaming_pq_ingest
 
     stream = spark.readStream.schema(
         "vec_id long, embedding array<float>"
     ).parquet(land)
-    q = start_streaming_imipq_ingest(
-        stream, cb1, cb2, cbs, idx, ckpt, encoding=encoding
+    q = start_streaming_pq_ingest(
+        stream, imi, cbs, idx, ckpt, encoding=encoding
     )
     try:
         q.processAllAvailable()
@@ -308,27 +308,26 @@ def test_streaming_imipq_opq_matches_batch_and_guards(spark, tmp_path):
     the layout, so an ingest or serve under a different perm (or under
     residual/raw) refuses."""
     from bearysta_spark.functions.similarity import (
-        imi_pq_index_frame,
-        imi_pq_topk_from_index,
-        imi_residual_frame,
         opq_roundrobin_perm,
-        write_imipq_index,
+        pq_topk_from_index,
+        residual_frame,
+        write_pq_index,
     )
     from bearysta_spark.functions.clustering import pq_codebooks_fit
     from bearysta_spark.queries import dsum
     from bearysta_spark.streaming.ann import (
-        imipq_topk_live,
-        start_streaming_imipq_ingest,
+        pq_topk_live,
+        start_streaming_pq_ingest,
     )
 
     land, idx, ckpt = (str(tmp_path / d) for d in ("land", "idx", "ckpt"))
-    cb1, cb2, cbs = _geometry()
+    imi, cbs = _geometry()
 
     e = (
         spark.read.parquet(f"{SF}/embeddings.parquet")
         .select("vec_id", "embedding")
     )
-    res = imi_residual_frame(e, cb1, cb2)
+    res = residual_frame(e, imi)
     perm = opq_roundrobin_perm(res, m=8)
     resp = res.withColumn(
         "residual",
@@ -343,8 +342,8 @@ def test_streaming_imipq_opq_matches_batch_and_guards(spark, tmp_path):
         stream = spark.readStream.schema(
             "vec_id long, embedding array<float>"
         ).parquet(land)
-        q = start_streaming_imipq_ingest(
-            stream, cb1, cb2, cb_opq, idx, ckpt,
+        q = start_streaming_pq_ingest(
+            stream, imi, cb_opq, idx, ckpt,
             encoding="opq", perm=enc_perm,
         )
         try:
@@ -360,19 +359,19 @@ def test_streaming_imipq_opq_matches_batch_and_guards(spark, tmp_path):
     q = e.filter(F.col("vec_id") < 5)
     got = {
         (r.qid, r.rank): (r.nid, float(r.adc))
-        for r in imipq_topk_live(
-            q, idx, cb1, cb2, cb_opq, k=5, probes=4,
+        for r in pq_topk_live(
+            q, idx, imi, cb_opq, k=5, probes=4,
             adc_agg=lambda c: dsum(c, 4), encoding="opq", perm=perm,
         ).collect()
     }
     bpath = str(tmp_path / "batchidx")
-    write_imipq_index(
-        e, cb1, cb2, cb_opq, bpath, encoding="opq", perm=perm
+    write_pq_index(
+        e, imi, cb_opq, bpath, encoding="opq", perm=perm
     )
     want = {
         (r.qid, r.rank): (r.nid, float(r.adc))
-        for r in imi_pq_topk_from_index(
-            spark.read.parquet(bpath), q, cb1, cb2, cb_opq, k=5,
+        for r in pq_topk_from_index(
+            spark.read.parquet(bpath), q, imi, cb_opq, k=5,
             probes=4, adc_agg=lambda c: dsum(c, 4), encoding="opq",
             perm=perm,
         ).collect()
@@ -383,13 +382,13 @@ def test_streaming_imipq_opq_matches_batch_and_guards(spark, tmp_path):
     perm2 = list(perm)
     perm2[0], perm2[1] = perm2[1], perm2[0]
     with pytest.raises(ValueError, match="layout mismatch"):
-        imipq_topk_live(
-            q, idx, cb1, cb2, cb_opq, k=5, probes=4,
+        pq_topk_live(
+            q, idx, imi, cb_opq, k=5, probes=4,
             encoding="opq", perm=perm2,
         )
     with pytest.raises(ValueError, match="layout mismatch"):
-        imipq_topk_live(
-            q, idx, cb1, cb2, cb_opq, k=5, probes=4, encoding="residual"
+        pq_topk_live(
+            q, idx, imi, cb_opq, k=5, probes=4, encoding="residual"
         )
     # a different-perm ingest refuses the existing layout
     _feed(spark, land, 500, 510)
